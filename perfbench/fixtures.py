@@ -1,187 +1,44 @@
 """Deterministic input tables for the benchmark.
 
-Writes the ten tables the engine's catalog reads (``catalog.TABLES``) as one
-parquet file each, with the schemas and value domains of the engine's
-fixture layout (FIXTURES.md): a TPC-H-shaped star schema, the ``events``
-stream table, and the ``documents``/``embeddings`` corpus tables. Row counts
-follow the layout's scale-factor sizes (lineitem ~6M rows per unit of
-scale). The tables are generated from a fixed seed, not from the run's
+The tables come from the repository's own fixture generator,
+``scripts/gen_fixtures.py`` (same schemas and value domains as the engine's
+fixture layout, FIXTURES.md), loaded by path and called with a fixed data
+seed and row counts scaled from the layout's sf1. The seed is not the run's
 ``--seed``: every run measures the same data, and the run seed only picks
 the chunking and the operation order (see README.md).
 """
 
 from __future__ import annotations
 
-import json
+import contextlib
+import importlib.util
 import os
+import sys
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DATA_SEED = 42
-
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-PTYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-LANGS = ["en", "en", "en", "de", "es", "fr", "zh"]
-ADJS = ["red", "blue", "hot", "small", "green", "cold", "big", "dark", "large"]
-NOUNS = ["widget", "gear", "bolt", "ring", "gizmo", "cog", "spring"]
-VOCAB = [
-    "a", "agg", "batch", "big", "column", "customer", "data", "dup", "fast",
-    "filter", "group", "hash", "join", "key", "line", "merge", "order",
-    "part", "query", "row", "scan", "slow", "small", "sort", "spark",
-    "stream", "table", "the", "value", "vector", "window",
-]
 EMB_DIM = 64
-DAY_US = 86_400_000_000
-
-
-def _ts(us: np.ndarray) -> pa.Array:
-    return pa.array(us.astype("int64"), pa.int64()).cast(pa.timestamp("us"))
-
-
-def _pick(options: list[str], idx: np.ndarray) -> pa.Array:
-    return pa.array(np.asarray(options, dtype=object)[idx], pa.string())
 
 
 def sizes(scale: float) -> dict[str, int]:
-    """Row counts per table at ``scale`` (1.0 = the layout's sf1)."""
+    """Row counts per table at ``scale`` (1.0 = the layout's sf1), as
+    ``gen_fixtures.generate`` keywords; lineitem follows from orders."""
     return {
-        "customer": int(150_000 * scale),
-        "supplier": int(10_000 * scale),
-        "part": int(200_000 * scale),
-        "orders": int(1_500_000 * scale),
-        "events": int(1_000_000 * scale),
-        "documents": int(50_000 * scale),
-        "embeddings": int(20_000 * scale),
+        "n_customer": int(150_000 * scale),
+        "n_supplier": int(10_000 * scale),
+        "n_part": int(200_000 * scale),
+        "n_orders": int(1_500_000 * scale),
+        "n_events": int(1_000_000 * scale),
+        "n_docs": int(50_000 * scale),
+        "n_vecs": int(20_000 * scale),
     }
 
 
-def generate(out_dir: str, scale: float) -> dict[str, int]:
-    """Write every table under ``out_dir``; returns rows per table."""
-    rng = np.random.default_rng(DATA_SEED)
-    n = sizes(scale)
-    os.makedirs(out_dir, exist_ok=True)
-    tables: dict[str, pa.Table] = {}
-
-    tables["region"] = pa.table({
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": REGIONS,
-    })
-    tables["nation"] = pa.table({
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-    })
-    nc, ns, npart, no = n["customer"], n["supplier"], n["part"], n["orders"]
-    tables["customer"] = pa.table({
-        "c_custkey": pa.array(np.arange(nc), pa.int64()),
-        "c_name": [f"Customer#{i:09d}" for i in range(nc)],
-        "c_nationkey": pa.array(rng.integers(0, 25, nc), pa.int32()),
-        "c_acctbal": np.round(rng.uniform(-999.99, 9999.99, nc), 2),
-        "c_mktsegment": _pick(SEGMENTS, rng.integers(0, 5, nc)),
-    })
-    tables["supplier"] = pa.table({
-        "s_suppkey": pa.array(np.arange(ns), pa.int64()),
-        "s_name": [f"Supplier#{i:09d}" for i in range(ns)],
-        "s_nationkey": pa.array(rng.integers(0, 25, ns), pa.int32()),
-        "s_acctbal": np.round(rng.uniform(-999.99, 9999.99, ns), 2),
-    })
-    names = [f"{a} {b}" for a in ADJS for b in NOUNS]
-    tables["part"] = pa.table({
-        "p_partkey": pa.array(np.arange(npart), pa.int64()),
-        "p_name": _pick(names, rng.integers(0, len(names), npart)),
-        "p_brand": _pick([f"Brand#{i}" for i in range(1, 26)], rng.integers(0, 25, npart)),
-        "p_type": _pick(PTYPES, rng.integers(0, len(PTYPES), npart)),
-        "p_size": pa.array(rng.integers(1, 51, npart), pa.int32()),
-        "p_retailprice": np.round(900.0 + (np.arange(npart) % 1000) / 10.0, 1),
-    })
-
-    d0 = np.datetime64("1995-01-01", "us").astype("int64")
-    d1 = np.datetime64("2001-08-01", "us").astype("int64")
-    odate = d0 + rng.integers(0, (d1 - d0) // DAY_US + 1, no) * DAY_US
-    tables["orders"] = pa.table({
-        "o_orderkey": pa.array(np.arange(no), pa.int64()),
-        "o_custkey": pa.array(rng.integers(0, nc, no), pa.int64()),
-        "o_orderstatus": _pick(["F", "O", "P"], rng.integers(0, 3, no)),
-        "o_totalprice": np.round(rng.uniform(1000.0, 500000.0, no), 2),
-        "o_orderdate": _ts(odate),
-        "o_orderpriority": _pick(PRIORITIES, rng.integers(0, 5, no)),
-    })
-
-    lines = rng.integers(1, 8, no)
-    nli = int(lines.sum())
-    first = np.repeat(np.cumsum(lines) - lines, lines)
-    order = rng.permutation(nli)  # lineitem is not stored in order-key order
-    okey = np.repeat(np.arange(no, dtype="int64"), lines)[order]
-    linenum = (np.arange(nli) - first + 1)[order]
-    ship = (odate.repeat(lines) + rng.integers(1, 96, nli) * DAY_US)[order]
-    tables["lineitem"] = pa.table({
-        "l_orderkey": pa.array(okey, pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, npart, nli), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, ns, nli), pa.int64()),
-        "l_linenumber": pa.array(linenum, pa.int32()),
-        "l_quantity": rng.integers(1, 51, nli).astype("float64"),
-        "l_extendedprice": np.round(rng.uniform(900.0, 105000.0, nli), 2),
-        "l_discount": np.round(rng.integers(0, 11, nli) / 100.0, 2),
-        "l_tax": np.round(rng.integers(0, 9, nli) / 100.0, 2),
-        "l_returnflag": _pick(["A", "N", "R"], rng.integers(0, 3, nli)),
-        "l_linestatus": _pick(["F", "O"], rng.integers(0, 2, nli)),
-        "l_shipdate": _ts(ship),
-    })
-
-    ne = n["events"]
-    e0 = np.datetime64("2024-01-01", "us").astype("int64")
-    ets = np.sort(e0 + rng.integers(0, 30 * DAY_US, ne))
-    tables["events"] = pa.table({
-        "event_id": pa.array(np.arange(ne), pa.int64()),
-        "ts": _ts(ets),
-        "user_id": pa.array(rng.integers(0, max(1, int(15_000 * scale)), ne), pa.int64()),
-        "event_type": _pick(EVENT_TYPES, rng.integers(0, 5, ne)),
-        "value": np.round(np.clip(rng.lognormal(3.5, 1.0, ne), 0.0, 560.0), 2),
-        "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, ne)],
-    })
-
-    nd = n["documents"]
-    w = 1.0 / np.arange(1, len(VOCAB) + 1) ** 0.8
-    w /= w.sum()
-    texts: list[str] = []
-    for i in range(nd):
-        r = rng.random()
-        if i > 10 and r < 0.002:  # exact duplicate of an earlier doc
-            texts.append(texts[int(rng.integers(0, i))])
-        elif i > 10 and r < 0.03:  # near duplicate: 1-3 words swapped
-            words = texts[int(rng.integers(0, i))].split()
-            for _ in range(int(rng.integers(1, 4))):
-                words[int(rng.integers(0, len(words)))] = VOCAB[int(rng.integers(0, len(VOCAB)))]
-            texts.append(" ".join(words))
-        else:
-            idx = rng.choice(len(VOCAB), size=int(rng.integers(10, 101)), p=w)
-            texts.append(" ".join(VOCAB[j] for j in idx))
-    tables["documents"] = pa.table({
-        "doc_id": pa.array(np.arange(nd), pa.int64()),
-        "text": texts,
-        "lang": _pick(LANGS, rng.integers(0, len(LANGS), nd)),
-        "source": [f"src{i % 20}" for i in range(nd)],
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-
-    nv = n["embeddings"]
-    labels = rng.integers(0, 10, nv)
-    centers = rng.normal(0.0, 0.02, size=(10, EMB_DIM))
-    vecs = rng.normal(0.0, 1.0, size=(nv, EMB_DIM)) * 0.15 + centers[labels]
-    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype("float32")
-    tables["embeddings"] = pa.table({
-        "vec_id": pa.array(np.arange(nv), pa.int64()),
-        "embedding": pa.FixedSizeListArray.from_arrays(
-            pa.array(vecs.ravel(), pa.float32()), EMB_DIM
-        ).cast(pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
-    })
-
-    for name, table in tables.items():
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
-    return {name: t.num_rows for name, t in tables.items()}
+def generate(out_dir: str, scale: float) -> None:
+    """Write every table the catalog reads under ``out_dir``."""
+    path = os.path.join(ROOT, "scripts", "gen_fixtures.py")
+    spec = importlib.util.spec_from_file_location("gen_fixtures", path)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    with contextlib.redirect_stdout(sys.stderr):  # stdout carries only the result
+        gen.generate(out_dir, DATA_SEED, **sizes(scale), emb_dim=EMB_DIM)

@@ -1,7 +1,7 @@
 """Recompute the reference figures: repeated runs over seeds, summarized.
 
     python3 perfbench/reference.py --runs 10 [--workloads corpus,event_bus]
-                                   [--first-seed 1] [--seconds 18] [--trace 0]
+                                   [--first-seed 1] [--seconds 20] [--trace 0]
 
 Runs ``perfbench/run.py`` once per seed and workload, one run at a time,
 appends every result line to ``.perfbench_reference.jsonl`` and prints, per
@@ -33,7 +33,7 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--workloads", default="corpus,event_bus")
     ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=18)
+    ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", default=os.path.join(ROOT, ".perfbench_reference.jsonl"))
     args = ap.parse_args()

@@ -1,6 +1,6 @@
 """Run one benchmark workload of the eventstream-spark engine.
 
-    python3 perfbench/run.py --workload corpus --seed 1 --seconds 18 --trace 0
+    python3 perfbench/run.py --workload corpus --seed 1 --seconds 20 --trace 0
 
 Run from the repository root. The run makes its inputs, computes the
 expected answers with duckdb, starts a session on every core of the host,
@@ -119,12 +119,11 @@ def run_pass(ops, tracer, want) -> PassRecord:
     return p
 
 
-def check_pass(p: PassRecord, ops) -> tuple[int, int]:
-    """(failed, wrong): operations that raised or whose output is wrong,
-    and of those, the wrong outputs."""
+def check_pass(p: PassRecord, ops) -> int:
+    """Operations of one pass that raised or whose output is wrong."""
     from perfbench.workloads import output_rows
 
-    failed = wrong = 0
+    failed = 0
     for op, r in zip(ops, p.ops):
         if r.out is None:
             failed += 1
@@ -132,10 +131,17 @@ def check_pass(p: PassRecord, ops) -> tuple[int, int]:
         problems = op.check(r.out)
         if problems:
             failed += 1
-            wrong += 1
             print(f"{op.name}: " + "; ".join(problems), file=sys.stderr)
         r.rows = output_rows(op.name, r.out)
-    return failed, wrong
+    return failed
+
+
+def verdict(passes: list[PassRecord], ops) -> dict:
+    """Checks every output of every pass. An operation that raised counts
+    as failed just as a wrong output does, and any failure makes the run
+    not correct: its time up to the exception is no result."""
+    failed = sum(check_pass(p, ops) for p in passes)
+    return {"correct": failed == 0, "attempted": len(ops) * len(passes), "failed": failed}
 
 
 def measure(args, run_dir: str) -> dict:
@@ -180,17 +186,14 @@ def measure(args, run_dir: str) -> dict:
         steal0 = trace.read_steal_ticks()
         untraced: list[PassRecord] = []
         traced: list[PassRecord] = []
-        failed = wrong = 0
         # a traced run alternates untraced and traced passes, as many of each
         for i in range(wl.timed_passes(args.seconds) * (2 if args.trace else 1)):
             trace_this = tracer is not None and i % 2 == 1
             p = run_pass(ops, tracer if trace_this else None, want)
-            f, w = check_pass(p, ops)
-            failed, wrong = failed + f, wrong + w
             (traced if trace_this else untraced).append(p)
         steal_s = (trace.read_steal_ticks() - steal0) / os.sysconf("SC_CLK_TCK")
+        outcome = verdict(untraced + traced, ops)
         _report(untraced + traced, harness_s, start_s, warmup_s)
-        attempted = len(ops) * (len(untraced) + len(traced))
 
         if args.trace:
             tracer.settle()
@@ -220,9 +223,7 @@ def measure(args, run_dir: str) -> dict:
         _stop_jvm(gateway)
         print(f"stop {time.monotonic() - t:.2f}s  total {time.monotonic() - _T0:.2f}s", file=sys.stderr)
     return {
-        "correct": wrong == 0,
-        "attempted": attempted,
-        "failed": failed,
+        **outcome,
         "metrics": {k: {"value": v, "unit": units[k]} for k, v in metrics.items()},
     }
 

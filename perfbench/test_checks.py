@@ -108,3 +108,32 @@ def test_benchmark_json_lists_every_metric():
         spec = json.load(f)
     assert {w["name"] for w in spec["workloads"]} == set(WORKLOADS)
     assert {m["name"]: (m["unit"], m["better"]) for m in spec["per_layer"]} == METRICS
+
+
+def _ops(fail: str | None):
+    from perfbench.workloads import Op
+
+    def run(name):
+        def call(mark):
+            mark()
+            if name == fail:
+                raise RuntimeError(f"{name} broke")
+            return [1, 2]
+        return call
+
+    return [Op(name, run(name), lambda out: []) for name in ("a", "b")]
+
+
+def test_run_is_correct_when_no_operation_fails():
+    from perfbench.run import run_pass, verdict
+
+    ops = _ops(fail=None)
+    assert verdict([run_pass(ops, None, {})], ops) == {"correct": True, "attempted": 2, "failed": 0}
+
+
+def test_raised_operation_makes_run_not_correct():
+    from perfbench.run import run_pass, verdict
+
+    ops = _ops(fail="b")
+    passes = [run_pass(ops, None, {}) for _ in range(2)]
+    assert verdict(passes, ops) == {"correct": False, "attempted": 4, "failed": 2}

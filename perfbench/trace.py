@@ -2,7 +2,8 @@
 
 Everything here is driven from the benchmark's own files: spans are taken
 around the calls the benchmark makes into each module, the wire publisher
-is timed by wrapping ``RedisStreamClient.xadd_many``, streaming progress
+is timed by wrapping ``RedisStreamClient.xadd_many``, the broker's side of
+the wire read by wrapping ``FakeRedisServer._dispatch``, streaming progress
 comes from a listener the benchmark registers, and Spark execution numbers
 are read once, at exit, from the application status store. Spans and
 events stay in memory until :meth:`Tracer.metrics` reduces them.
@@ -57,6 +58,7 @@ METRICS = {
     "sources.publish_s": ("s", "lower"),
     "sources.publish_events": ("count", "higher"),
     "sources.read_rows": ("count", "higher"),
+    "sources.xrange_s": ("s", "lower"),
     "sources.read_rows_per_s": ("1/s", "higher"),
     "sources.latest_offset_ms": ("ms", "lower"),
     "sources.backlog_end": ("count", "lower"),
@@ -106,11 +108,12 @@ class Tracer:
     """Spans of the traced passes plus the raw events that fall in them."""
 
     def __init__(self, spark):
-        from eventstream_spark.sources import redis_stream
+        from eventstream_spark.sources import redis_stream, resp_server
 
         self._spark = spark
         self.progress: list[dict] = []
         self.publishes: list[tuple[float, float, int]] = []  # start, seconds, entries
+        self.xranges: list[tuple[float, float]] = []  # start, seconds
         self.recording = False
         spark.streams.addListener(_ProgressRecorder(self.progress))
 
@@ -126,14 +129,25 @@ class Tracer:
 
         redis_stream.RedisStreamClient.xadd_many = xadd_many
 
-    def settle(self, quiet_s: float = 1.0, limit_s: float = 15.0) -> None:
+        dispatch = resp_server.FakeRedisServer._dispatch
+
+        def timed_dispatch(server, cmd, a):
+            t0 = time.time()
+            out = dispatch(server, cmd, a)
+            if tracer.recording and cmd == "XRANGE":
+                tracer.xranges.append((t0, time.time() - t0))
+            return out
+
+        resp_server.FakeRedisServer._dispatch = timed_dispatch
+
+    def settle(self) -> None:
         """Wait until the listener bus has delivered the last progress
-        events (no new event for ``quiet_s``)."""
-        end = time.time() + limit_s
+        events (no new event for a second, at most 15 s)."""
+        end = time.time() + 15.0
         seen = -1
         while seen != len(self.progress) and time.time() < end:
             seen = len(self.progress)
-            time.sleep(quiet_s)
+            time.sleep(1.0)
 
     def status_store(self) -> tuple[list[dict], dict[int, dict]]:
         """Jobs and stages retained by Spark's status store, as JSON."""
@@ -239,6 +253,7 @@ class Tracer:
         m["sources.publish_s"] = sum(s for _, s, _ in published)
         m["sources.publish_events"] = sum(n for _, _, n in published)
         m["sources.read_rows"] = wire_rows
+        m["sources.xrange_s"] = sum(s for t, s in self.xranges if p.t0 <= t <= p.t1)
         m["sources.read_rows_per_s"] = wire_rows / wire_s if wire_s else 0.0
         m["sources.latest_offset_ms"] = mean(dur(wire, "latestOffset"))
         m["sources.backlog_end"] = sum(r.backlog for r in p.ops)
