@@ -22,6 +22,7 @@ state.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -29,6 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col, lit
 
+from ..cache import register_memo_clearer
 from ..catalog import EVENTS_RAW_SCHEMA, fix_nanos_ts
 from ..sources.stream import file_stream
 
@@ -130,12 +132,32 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: needs (scripts/scale_smoke.py records them at 100x).
 LAST_RUN_INFO: dict = {}
 
+#: (session, memory-sink view, checkpoint dir) of every drain not yet
+#: released. The returned DataFrame is lazy, so the drain cannot clean up
+#: after itself; cache.release_cached (the harness's one lifecycle call,
+#: made after the result is materialized) drops them.
+_DRAINED: list[tuple[SparkSession, str, str]] = []
+
+
+def _release_drained() -> None:
+    while _DRAINED:
+        spark, name, ckpt = _DRAINED.pop()
+        try:
+            spark.catalog.dropTempView(name)
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+register_memo_clearer(_release_drained)
+
 
 def _run_to_table(agg: DataFrame, spark: SparkSession, mode: str = "complete") -> DataFrame:
     """Drain the stream with availableNow into a uniquely named in-memory
-    table and return it as a batch DataFrame."""
+    table and return it as a batch DataFrame. The table and the checkpoint
+    dir live until the next ``cache.release_cached()``."""
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="es_ckpt_")
+    _DRAINED.append((spark, name, ckpt))
     # recentProgress is capped at numRecentProgressUpdates entries (default
     # 100); a many-file landing zone with a small maxFilesPerTrigger drains
     # in more micro-batches than that and LAST_RUN_INFO would silently

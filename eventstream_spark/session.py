@@ -18,6 +18,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def local_sizing(usable_cpus: int, host_mem_bytes: int) -> tuple[int, str]:
+    """Default ``local[N]`` thread count and driver heap for a host.
+
+    Local mode runs every task inside the driver JVM, so N is the CPUs the
+    process may use, and the heap is half of host memory, capped at 16g
+    (see the heap note in :func:`get_spark`) and floored at 1g. A host with
+    32 GB or more keeps the 16g heap."""
+    heap_mb = max(1024, min(16 * 1024, host_mem_bytes // 2 // 2**20))
+    return max(1, usable_cpus), f"{heap_mb}m"
+
+
 def get_spark(
     app_name: str = "eventstream-spark",
     master: str | None = None,
@@ -26,12 +37,16 @@ def get_spark(
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
 
-    Local test/bench runs use ``local[$SPARK_GRAFT_CPUS]``; on a cluster pass
-    ``master=None`` and let spark-submit own it.
+    Local test/bench runs use ``local[$SPARK_GRAFT_CPUS]`` and a heap of
+    ``$SPARK_GRAFT_DRIVER_MEM``; each unset one defaults from the host
+    (:func:`local_sizing`). On a cluster spark-submit owns both.
     """
+    cpus, heap = local_sizing(
+        len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+    )
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', cpus)}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
@@ -82,8 +97,9 @@ def get_spark(
         # mid-suite (one query spiked 0.9s -> 14.5s); 16g keeps GC off the
         # critical path while staying under the 32g compressed-oops limit
         # (a 32g heap disables compressed oops and measurably slowed the
-        # suite). On a real cluster spark-submit overrides this.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # suite), so 16g caps the host-sized default. On a real cluster
+        # spark-submit overrides this.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -87,33 +87,23 @@ class RespError(Exception):
 
 
 class _RespReader:
-    """Incremental RESP2 reply parser over a socket."""
+    """RESP2 reply parser over a socket's buffered reader: ``readline`` for
+    type lines, ``read(n + 2)`` for bulk payloads, so a reply is parsed
+    without re-copying what is still buffered, however the bytes were split
+    across ``recv`` calls. A connection closed mid-reply raises
+    ``ConnectionError``."""
 
     def __init__(self, sock: socket.socket):
-        self._sock = sock
-        self._buf = b""
+        self._file = sock.makefile("rb")
 
-    def _read_line(self) -> bytes:
-        while _CRLF not in self._buf:
-            chunk = self._sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("redis connection closed")
-            self._buf += chunk
-        line, self._buf = self._buf.split(_CRLF, 1)
-        return line
-
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n + 2:
-            chunk = self._sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("redis connection closed")
-            self._buf += chunk
-        data, self._buf = self._buf[:n], self._buf[n + 2 :]
-        return data
+    def close(self) -> None:
+        self._file.close()
 
     def read_reply(self) -> Any:
-        line = self._read_line()
-        kind, rest = line[:1], line[1:]
+        line = self._file.readline()
+        if not line.endswith(_CRLF):
+            raise ConnectionError("redis connection closed")
+        kind, rest = line[:1], line[1:-2]
         if kind == b"+":
             return rest.decode()
         if kind == b"-":
@@ -124,7 +114,10 @@ class _RespReader:
             n = int(rest)
             if n == -1:
                 return None
-            return self._read_exact(n).decode("utf-8", "replace")
+            data = self._file.read(n + 2)
+            if len(data) < n + 2:
+                raise ConnectionError("redis connection closed")
+            return data[:-2].decode("utf-8", "replace")
         if kind == b"*":
             n = int(rest)
             if n == -1:
@@ -138,12 +131,14 @@ class RedisStreamClient:
 
     def __init__(self, host: str, port: int, password: str | None = None, timeout: float = 10.0):
         self._sock = socket.create_connection((host, port), timeout=timeout)
+        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._reader = _RespReader(self._sock)
         if password is not None:
             self.execute("AUTH", password)
 
     def close(self) -> None:
         try:
+            self._reader.close()
             self._sock.close()
         except OSError:
             pass

@@ -294,3 +294,207 @@ def test_rediswire_rows_compose_into_envelopes(spark):
         resp = create_response(env, "responder", "i-9").first()
         assert resp.event == "get_instance_response"
         assert resp.response_to == row.message_id
+
+
+# --- broker semantics and RESP framing (Spark-free) -----------------------
+
+_IDS = ["1-1", "1-2", "2-0", "3-5", "5-0"]
+
+
+def _ids(entries):
+    return [e[0] for e in entries]
+
+
+def _fill_ids(client, stream="S"):
+    for i, entry_id in enumerate(_IDS):
+        assert client.xadd(stream, {"i": str(i)}, entry_id=entry_id) == entry_id
+
+
+def test_xrange_bounds_and_count():
+    with FakeRedisServer() as server, RedisStreamClient("127.0.0.1", server.port) as c:
+        _fill_ids(c)
+        assert _ids(c.xrange("S")) == _IDS
+        assert c.xrange("S")[3][1] == {"i": "3"}
+        assert _ids(c.xrange("S", "1-2", "3-5")) == ["1-2", "2-0", "3-5"]
+        assert _ids(c.xrange("S", "(1-2", "(3-5")) == ["2-0"]
+        assert _ids(c.xrange("S", "(1-1", "3-5")) == ["1-2", "2-0", "3-5"]
+        # an ID without seq spans its whole millisecond
+        assert _ids(c.xrange("S", "1", "1")) == ["1-1", "1-2"]
+        assert _ids(c.xrange("S", "2", "3")) == ["2-0", "3-5"]
+        # COUNT takes from the low end, also after an exclusive bound
+        assert _ids(c.xrange("S", count=2)) == ["1-1", "1-2"]
+        assert _ids(c.xrange("S", "(1-2", "+", count=2)) == ["2-0", "3-5"]
+        assert _ids(c.xrange("S", count=0)) == []
+        assert _ids(c.xrange("S", count=99)) == _IDS
+
+
+def test_xrevrange_bounds_and_count():
+    with FakeRedisServer() as server, RedisStreamClient("127.0.0.1", server.port) as c:
+        _fill_ids(c)
+        assert _ids(c.xrevrange("S")) == _IDS[::-1]
+        assert _ids(c.xrevrange("S", "3-5", "1-2")) == ["3-5", "2-0", "1-2"]
+        assert _ids(c.xrevrange("S", "(3-5", "(1-2")) == ["2-0"]
+        # COUNT takes from the high end
+        assert _ids(c.xrevrange("S", count=2)) == ["5-0", "3-5"]
+        assert _ids(c.xrevrange("S", "(5-0", "-", count=2)) == ["3-5", "2-0"]
+        assert c.last_id("S") == "5-0"
+
+
+def test_xrange_empty_and_missing():
+    with FakeRedisServer() as server, RedisStreamClient("127.0.0.1", server.port) as c:
+        _fill_ids(c)
+        assert c.xrange("S", "4", "4") == []  # a gap between entries
+        assert c.xrange("S", "3-5", "2-0") == []  # inverted bounds
+        assert c.xrange("S", "(5-0") == []  # past the top
+        assert c.xrange("S", "(2-0", "(3-5") == []  # adjacent exclusive
+        assert c.xrevrange("S", "2-0", "3-5") == []
+        assert c.xrange("NOPE") == []
+        assert c.xrevrange("NOPE", count=1) == []
+        assert c.last_id("NOPE") is None
+        assert c.xlen("NOPE") == 0
+        # a malformed ID gets an error reply, and the connection stays usable
+        with pytest.raises(RespError, match="syntax error"):
+            c.xrange("S", "not-an-id")
+        assert c.xlen("S") == 5
+
+
+def test_xadd_rejects_ids_at_or_below_the_top():
+    """Redis's ordering rule keeps every stream sorted by ID; a refused
+    entry leaves the stream as it was."""
+    with FakeRedisServer() as server, RedisStreamClient("127.0.0.1", server.port) as c:
+        with pytest.raises(RespError, match="greater than 0-0"):
+            c.xadd("S", {"k": "v"}, entry_id="0-0")
+        assert c.xadd("S", {"k": "v"}, entry_id="5-3") == "5-3"
+        for bad in ("5-3", "5-2", "4-9", "5"):
+            with pytest.raises(RespError, match="equal or smaller than the target stream top"):
+                c.xadd("S", {"k": "x"}, entry_id=bad)
+        assert c.xadd("S", {"k": "v"}, entry_id="6") == "6-0"
+        assert _ids(c.xrange("S")) == ["5-3", "6-0"]
+        # generated IDs continue past an explicit ID from the future
+        c.xadd("S", {"k": "v"}, entry_id="99999999999999-5")
+        assert c.xadd("S", {"k": "v"}) == "99999999999999-6"
+        assert c.xlen("S") == 4
+        # a generated ID on another stream is not held back by this one
+        assert int(c.xadd("T", {"k": "v"}).split("-")[0]) < 99999999999999
+
+
+def test_xreadgroup_cursor_and_pending():
+    with FakeRedisServer() as server, RedisStreamClient("127.0.0.1", server.port) as c:
+        _fill_ids(c)
+        c.xgroup_create("S", "g", start_id="0")
+        assert _ids(c.xreadgroup("g", "w1", "S", count=2)) == ["1-1", "1-2"]
+        assert _ids(c.xreadgroup("g", "w2", "S", count=2)) == ["2-0", "3-5"]
+        assert c.xreadgroup("g", "w1", "S", count=2)[0] == ("5-0", {"i": "4"})
+        assert c.xreadgroup("g", "w1", "S") == []
+        # pending: each delivered entry acks once; an unknown ID never does
+        assert c.xack("S", "g", "1-2", "3-5", "9-9") == 2
+        assert c.xack("S", "g", "1-2") == 0
+        assert c.xack("S", "g", "1-1", "2-0", "5-0") == 3
+        # a group starting mid-stream reads only what follows its start
+        c.xgroup_create("S", "mid", start_id="2-0")
+        assert _ids(c.xreadgroup("mid", "w", "S")) == ["3-5", "5-0"]
+        with pytest.raises(RespError, match="NOGROUP"):
+            c.xreadgroup("nope", "w", "S")
+
+
+def test_xgroup_create_dollar_reads_only_new_entries():
+    with FakeRedisServer() as server, RedisStreamClient("127.0.0.1", server.port) as c:
+        _fill_ids(c)
+        c.xgroup_create("S", "live", start_id="$")
+        assert c.xreadgroup("live", "w", "S") == []
+        assert c.xadd("S", {"k": "new"}, entry_id="7-0") == "7-0"
+        assert c.xreadgroup("live", "w", "S") == [("7-0", {"k": "new"})]
+        # on a fresh stream, "$" starts before the first entry
+        c.xgroup_create("FRESH", "g", start_id="$")
+        c.xadd("FRESH", {"k": "v"}, entry_id="1-0")
+        assert _ids(c.xreadgroup("g", "w", "FRESH")) == ["1-0"]
+
+
+def test_command_sent_one_byte_at_a_time_gets_its_reply():
+    import socket
+    import time
+
+    from eventstream_spark.sources.redis_stream import _RespReader, encode_command
+
+    with FakeRedisServer() as server:
+        sock = socket.create_connection(("127.0.0.1", server.port), timeout=10)
+        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        reader = _RespReader(sock)
+        try:
+            for cmd, want in (
+                (("XADD", "S", "1-1", "field", "value"), "1-1"),
+                (("XRANGE", "S", "-", "+"), [["1-1", ["field", "value"]]]),
+            ):
+                for byte in encode_command(*cmd):
+                    sock.sendall(bytes([byte]))
+                    time.sleep(0.001)
+                assert reader.read_reply() == want
+        finally:
+            reader.close()
+            sock.close()
+
+
+def test_pipeline_of_1000_xadds_and_a_bad_command_in_one_write():
+    """1,001 commands in one write span many server recvs, and their
+    replies span many client reads; every reply still comes back in
+    command order, the bad command's error in its place."""
+    import socket
+
+    from eventstream_spark.sources.redis_stream import _RespReader, encode_command
+
+    value = "v" * 200  # ~230 KB of commands: several recvs on each end
+    cmds = [("XADD", "S", f"{i + 1}-0", "n", str(i), "pad", value) for i in range(1000)]
+    cmds.insert(500, ("BOGUS", "x"))
+    with FakeRedisServer() as server, RedisStreamClient("127.0.0.1", server.port) as c:
+        sock = socket.create_connection(("127.0.0.1", server.port), timeout=10)
+        reader = _RespReader(sock)
+        try:
+            sock.sendall(b"".join(encode_command(*cmd) for cmd in cmds))
+            replies = []
+            for _ in cmds:
+                try:
+                    replies.append(reader.read_reply())
+                except RespError as e:
+                    replies.append(e)
+        finally:
+            reader.close()
+            sock.close()
+        assert isinstance(replies[500], RespError)
+        assert "unknown command" in str(replies[500])
+        del replies[500]
+        assert replies == [f"{i + 1}-0" for i in range(1000)]
+        # the client end of the same pipeline: 1,001 replies consumed, the
+        # first error raised after them, the connection still aligned
+        with pytest.raises(RespError, match="unknown command"):
+            c.pipeline([(*cmd[:2], "*", *cmd[3:]) for cmd in cmds])
+        assert c.ping() == "PONG"
+        assert c.xlen("S") == 2000
+        page = c.xrange("S", count=1000)
+        assert [e[1]["n"] for e in page] == [str(i) for i in range(1000)]
+        assert all(e[1]["pad"] == value for e in page)
+
+
+@pytest.mark.parametrize("partial", [b"*2\r\n$5\r\nhel", b"*2\r\n$5", b"+PO"])
+def test_server_closing_mid_reply_raises_connection_error(partial):
+    import socket
+    import threading
+
+    listener = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+    listener.bind(("127.0.0.1", 0))
+    listener.listen(1)
+
+    def serve():
+        conn, _ = listener.accept()
+        conn.recv(65536)
+        conn.sendall(partial)
+        conn.close()
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    try:
+        with RedisStreamClient("127.0.0.1", listener.getsockname()[1]) as c:
+            with pytest.raises(ConnectionError):
+                c.ping()
+    finally:
+        t.join(10)
+        listener.close()

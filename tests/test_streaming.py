@@ -472,3 +472,29 @@ def test_stream_doremi_paths_agree(spark, sf_dir):
     finally:
         sq._DOREMI_BCAST_VOCAB_CAP = old
     assert fast == slow
+
+
+def test_run_to_table_state_released_by_release_cached(spark, sf_dir):
+    """Each drain's memory-sink view and es_ckpt_* checkpoint dir live
+    until cache.release_cached(), the one lifecycle call a harness makes
+    after materializing a result; repeated calls must not accumulate
+    either."""
+    import glob
+    import os
+    import tempfile
+
+    from eventstream_spark.cache import release_cached
+    from eventstream_spark.operators.streaming_queries import q91_stream_dedup
+
+    def footprint():
+        ckpts = glob.glob(os.path.join(tempfile.gettempdir(), "es_ckpt_*"))
+        return len(spark.catalog.listTables()), len(ckpts)
+
+    release_cached()
+    before = footprint()
+    for _ in range(3):
+        df = q91_stream_dedup(spark, sf_dir)
+        assert footprint() == (before[0] + 1, before[1] + 1)
+        assert df.collect()
+        release_cached()
+        assert footprint() == before
