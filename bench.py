@@ -1,15 +1,15 @@
 """Benchmark harness: runs the headline query suite at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}, and writes the per-query run
+records (eventstream_spark.profile: build/exec split, job counts, result
+rows, spill and shuffle bytes) of the steady run to BENCH_layers.json next
+to this file.
 
 Session bring-up is excluded (BASELINE.md: steady-state query time); a
 warm-up query triggers JVM/codegen initialization before timing starts.
 Each query is executed to completion with every result row materialized on
-the driver via toPandas() — the Arrow transfer path, which is what any real
-consumer (including the duckdb-oracle comparison) uses; row-at-a-time
-collect() pays a 5-10x pickle tax on row-heavy results that measures the
-serializer, not the query.
+the driver via toPandas() (profile.run_query's "pandas" drain).
 """
 
 from __future__ import annotations
@@ -18,12 +18,11 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from eventstream_spark.cache import release_cached
 from eventstream_spark.operators import all_queries
+from eventstream_spark.profile import run_query
 from eventstream_spark.session import get_spark
 
 # Headline set: scan/agg, filter, joins (broadcast + shuffle + theta),
@@ -282,45 +281,29 @@ def main() -> None:
 
     spark.range(64).repartition(8).mapInPandas(_touch, schema="n long").collect()
 
-    # Plan-compile warm-up: run every headline query once at sf0.001 (tiny
-    # data, same plan structure) so whole-stage-codegen classes are compiled
-    # and cached before anything is timed. Janino compile is a per-plan
-    # ONE-TIME cost in any long-lived service (the generated class is keyed
-    # by source, not by input paths, so it carries across scale factors);
-    # without this pass the widest lambda-heavy plans charge ~4-9 s of
-    # compiler time to their first timed run — measuring janino, not the
-    # query. The timed runs below still include all I/O, shuffles, and
-    # first-touch page-cache effects at the bench SF.
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for name in HEADLINE:
-            queries[name](spark, warm_dir).toPandas()
-            release_cached()
-
-    # Each query is timed four times (plan-warm — see above). The first
-    # run still pays first-touch effects at this SF (page cache, AQE stat
-    # collection, broadcast builds) and is recorded separately as
-    # `cold_*`. The PRIMARY metric (`value`/`queries`) is the min of the
-    # three warm runs — the same min-of-3 convention
-    # scripts/bench_duckdb.py uses for the oracle leg, so both sides of
-    # BASELINE.md see identical noise exposure (the r9 asymmetry — cold
-    # single-run Spark vs min-of-3 duckdb — manufactured a phantom
-    # text-family "regression" that did not reproduce on an idle box).
-    # Per-query warm spread (max-min) makes inter-run noise visible in
-    # the artifact itself.
+    # Each query is timed four times; profile.run_query precedes the first
+    # with an untimed plan-warm run at sf0.001 (tiny data, same plan
+    # structure): Janino compile is a per-plan ONE-TIME cost in any
+    # long-lived service, and without it the widest lambda-heavy plans
+    # charge ~4-9 s of compiler time to their first timed run — measuring
+    # janino, not the query. The timed runs still include all I/O,
+    # shuffles, and first-touch effects at the bench SF; the first run
+    # pays those (page cache, AQE stat collection, broadcast builds) and
+    # is recorded separately as `cold_*`. The PRIMARY metric
+    # (`value`/`queries`) is the min of the three warm runs — the same
+    # min-of-3 convention scripts/bench_duckdb.py uses for the oracle leg,
+    # so both sides of BASELINE.md see identical noise exposure (the r9
+    # asymmetry — cold single-run Spark vs min-of-3 duckdb — manufactured
+    # a phantom text-family "regression" that did not reproduce on an idle
+    # box). Per-query warm spread (max-min) makes inter-run noise visible
+    # in the artifact itself.
     cold: dict[str, float] = {}
     steady: dict[str, float] = {}
     spread: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     for name in HEADLINE:
-        runs = []
-        for _ in range(4):
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).toPandas()
-            runs.append(round(time.perf_counter() - t0, 3))
-            # Free operator-internal persisted intermediates between runs so
-            # cached blocks don't accumulate across the suite (outside the
-            # timer: a consumer frees the working set after reading results).
-            release_cached()
+        records = [run_query(spark, queries[name], sf_dir) for _ in range(4)]
+        runs = [round(r["wall_s"], 3) for r in records]
         cold[name] = runs[0]
         # Steady state = min of the THREE warm runs: the box hits
         # multi-second virtualization stalls under full 32-thread load
@@ -331,6 +314,11 @@ def main() -> None:
         # few — both can land on a stall.
         steady[name] = min(runs[1:])
         spread[name] = round(max(runs[1:]) - min(runs[1:]), 3)
+        layers[name] = min(records[1:], key=lambda r: r["wall_s"])
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "BENCH_layers.json"), "w") as fh:
+        json.dump({"sf": sf, "queries": layers}, fh, indent=1)
 
     # Field ORDER is part of the artifact contract: the driver's capture
     # tails the line with a bounded buffer, so the PRIMARY per-query dict

@@ -173,10 +173,6 @@ def spread(df: DataFrame, per_core_bytes: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` works as an
     entry point alongside the DataFrame builders."""

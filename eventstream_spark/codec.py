@@ -122,12 +122,6 @@ def interpret_boolean(c: Column) -> Column:
     )
 
 
-def interpret_json(c: Column, schema) -> Column:
-    """Embedded JSON (dict/list smuggled through a string value) → typed
-    struct/array (reference json_to_dict_or_list, common.py:349-363)."""
-    return F.from_json(c, schema)
-
-
 def string_shadow(dt):
     """The all-string-leaves twin of a nested type: same struct/array/map
     shape, every leaf a string. ``from_json`` with this schema never drops a

@@ -92,13 +92,6 @@ def shingle_table(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.explode(word_shingles("text")).alias("s"))
 
 
-# --- exact dedup -----------------------------------------------------------
-
-def exact_dedup(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Exact dedup: one row per distinct key (hash-aggregate, single shuffle)."""
-    return df.dropDuplicates(cols)
-
-
 def q40_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load(spark, sf_dir, "documents"))
     return docs.select(F.md5(col("text")).alias("fp")).agg(
@@ -1182,19 +1175,12 @@ _SFX_DEPTH = 16  # bounded suffix depth (tokens) == the cap on reported length
 # >1 GB with JVM sort overhead). Round-9 A/B at the 100× smoke, same box,
 # back-to-back (SCALING.md): 2M rows/task (32 parts — the floor, i.e. the
 # round-8 plan) q219+q220 = 477.5 s; 250k (99 parts) = 344.3 s; 100k
-# (248 parts) = 336.3 s. Round-11 re-A/B (scripts/ab_sfx_residual.py,
-# SFX_AB_RESIDUAL.json) crossed rows-per-task with the persist level and
+# (248 parts) = 336.3 s. Round-11 re-A/B (SFX_AB_RESIDUAL.json; the A/B
+# script is in git history) crossed rows-per-task with the persist level and
 # found the interaction the round-9 single-knob sweep missed: with the
 # wide suffix table cached DISK_ONLY (see suffix_repeat_lengths), 100k
 # beats 250k by another ~10-16% wall with spill −60% — 100k adopted.
 _SFX_ROWS_PER_TASK = 100_000
-
-# Persist level for the wide range-sorted suffix stage — a module constant
-# (not a hard-coded call-site arg) so scripts/ab_sfx_residual.py can cross
-# it with rows-per-task reproducibly (round-11 ADVICE: the explicit
-# DISK_ONLY argument silently overrode the script's persist_tracked
-# monkeypatch, making the recorded base variant unreachable).
-_SFX_PERSIST_LEVEL = StorageLevel.DISK_ONLY
 
 
 def _sfx_partitions(docs: DataFrame) -> int:
@@ -1284,8 +1270,8 @@ def suffix_repeat_lengths(
     suf = toks.select(
         "doc_id", "source", F.posexplode(keys).alias("i0", "key")
     ).select("doc_id", "source", (col("i0") + 1).alias("pos"), "key")
-    # DISK_ONLY for the wide range-sorted stage (round-11, measured in
-    # scripts/ab_sfx_residual.py at the 100x smoke): this table is
+    # DISK_ONLY for the wide range-sorted stage (round-11, measured at the
+    # 100x smoke, SFX_AB_RESIDUAL.json): this table is
     # string-keyed (~130 B/row), read exactly twice (edge collect + the
     # window pass), and a MEMORY_AND_DISK copy of it competed with the
     # window sort's execution memory in the unified pool — the memo-cold
@@ -1312,7 +1298,7 @@ def suffix_repeat_lengths(
         suf.repartitionByRange(n_parts, "key", "doc_id", "pos").withColumn(
             "_pid", F.spark_partition_id()
         ),
-        level=_SFX_PERSIST_LEVEL,
+        level=StorageLevel.DISK_ONLY,
     )
     edges = sorted(
         (r["_pid"], r["fst"]["key"], r["lst"]["key"])

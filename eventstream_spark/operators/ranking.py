@@ -142,8 +142,8 @@ def exact_value_at_ranks(
     filtered up front (a NULL would land in a None histogram bucket and
     desync the driver cumsum — the round-8 ADVICE latent bug).
 
-    A/B vs the global_row_number spelling (scripts/ab_rank_pick.py,
-    sf0.1 lineitem ~600k rows, median of 3 steady, this host): bucketed
+    A/B vs the global_row_number spelling (round 8, CHANGELOG.md; script
+    in git history; sf0.1 lineitem ~600k rows, median of 3 steady): bucketed
     1.16 s vs rank-exchange 1.90 s, values asserted equal — adopted; the
     rank exchange (q210's former plan) is the recorded loser. Empty input
     fails LOUD (ValueError naming ``what``) — the embedding_dim

@@ -750,8 +750,8 @@ def q210_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact side is the BUCKETED RANK-PICK (ranking.exact_value_at_ranks) —
     histogram + target-bucket-only window, NO full-table exchange. The
     round-7 A/B this replaces: the former global_row_number range exchange
-    measured 1.90 s for the pick vs 1.16 s bucketed (scripts/
-    ab_rank_pick.py, sf0.1 median-of-3 steady, values asserted equal);
+    measured 1.90 s for the pick vs 1.16 s bucketed (CHANGELOG.md round 8,
+    sf0.1 median-of-3 steady, values asserted equal);
     Spark's exact `percentile`
     aggregate was 3× slower still (r6 measurement) and holds a per-task
     value-count map that grows with distinct values. Empty table fails

@@ -564,7 +564,7 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     # materializes the tokenize + partial-agg + shuffle write ONCE (plan-
     # verified: the vocab leg reads a ReusedExchange of the tf shuffle).
     # The term exchange's volume is unchanged (per-task partials either
-    # way). Interleaved A/B at sf0.1 (scripts/ab_unigram_reuse.py): 1.56 →
+    # way). Interleaved A/B at sf0.1 (OPTIMIZATION_r12.md): 1.56 →
     # 1.33 s median / 1.33 → 1.23 min; at corpus scale this is one fewer
     # full corpus pass. Distinct from the REJECTED persist-tf form (1.35
     # vs 0.97 s min — a materialization barrier + corpus-sized write);
@@ -3363,7 +3363,7 @@ def q223_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank would); only the global position pays a range exchange —
     ONE, down from the former two (scalable_ntile + rank).
 
-    A/B (scripts/ab_boundary_stage.py, results asserted equal, steady
+    Round-9 A/B (script in git history, results asserted equal, steady
     median of 3): one-JVM local[32] does NOT reward the reclaim — 2.86 s
     vs 2.21 s at sf0.1, 10.5 vs 9.3 at 100× — because (a) the LM build
     dominates q223's cost at every measured scale (12.9 of 12.5 s total
@@ -3488,8 +3488,8 @@ def q224_rho_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetches the exact boundary tuple (rho_u, doc_id) at rank ceil(n/4)
     and the kept flag is a MAP-SIDE comparison against it (kept ⟺ the
     row sorts at-or-before the boundary in the total order), replacing
-    the former range exchange (the q223/q150/q210 reclaim family). A/B
-    (scripts/ab_boundary_stage.py): exactly EVEN at 100× (6.80 s both)
+    the former range exchange (the q223/q150/q210 reclaim family). Round-9
+    A/B (script in git history): exactly EVEN at 100× (6.80 s both)
     and 0.46 s behind at sf0.1 — the driver-round-trip floor — while
     carrying ZERO full-table exchanges where the old plan had one; on a
     cluster that trade is network traffic for O(1) driver jobs. Never a

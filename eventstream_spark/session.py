@@ -74,12 +74,12 @@ def get_spark(
         # halves the agg spill (19.3 -> 10.7 GB) but DOUBLES shuffle bytes
         # (worse per-segment compression) and wall clock (43 -> 105 s) on
         # this one-JVM harness, where spill goes to local NVMe. So the
-        # static 32 stays; SPARK_GRAFT_INITIAL_PARTITIONS overrides for
-        # experiments, and on a real cluster shuffle.partitions is sized
-        # per workload (SCALING.md "Outlier triage", round-6 pass).
+        # static 32 stays (extra_conf overrides it); on a real cluster
+        # shuffle.partitions is sized per workload (SCALING.md "Outlier
+        # triage", round-6 pass).
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(shuffle_partitions)),
+            str(shuffle_partitions),
         )
         # Arrow batches for every pandas_udf / mapInPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -101,6 +101,17 @@ def get_spark(
         # spark-submit overrides this.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
     )
+    if master.startswith("local"):
+        # Python workers import this package when they unpickle a UDF or
+        # create a Python data source (rediswire); they start in the JVM's
+        # working directory, so without this a run from any directory but
+        # the repository root fails with ModuleNotFoundError on the worker.
+        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        inherited = os.environ.get("PYTHONPATH")
+        builder = builder.config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join([here, inherited] if inherited else [here]),
+        )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

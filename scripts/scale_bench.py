@@ -22,9 +22,10 @@ range exchanges) and q210 (quantile sketch + bucketed rank-pick).
 Method notes:
 - Both engines run the identical SQL/plan the differential gate verifies
   (duck: the oracle string; Spark: the registered DataFrame query).
-- Spark drains through the smoke harness's noop sink with release_cached
-  between reps; duckdb through fetchall() — both measure computation, not
-  result transfer (outputs are small aggregates for every query here).
+- Spark drains through eventstream_spark.profile.run_query's noop sink
+  (the smoke harness's protocol); duckdb through fetchall() — both
+  measure computation, not result transfer (outputs are small aggregates
+  for every query here).
 - duckdb reads the scaled dirs via read_parquet glob (multi-file layout).
 - One warm rep each at Nx (minutes-long runs; the 1x side uses min-of-2
   like the bench convention).
@@ -119,7 +120,7 @@ def main() -> None:
     oracles = all_oracles()
     queries = all_queries()
 
-    from eventstream_spark.cache import release_cached
+    from eventstream_spark.profile import run_query
     from eventstream_spark.session import get_spark
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -154,14 +155,8 @@ def main() -> None:
     for n in points:
         reps = 2 if n == 1 else 1
         for q, d in [(q, dirs[n]) for q in names] + [(q, gdirs[n]) for q in gnames]:
-            runs = []
-            for _ in range(reps):
-                release_cached()
-                t0 = time.perf_counter()
-                queries[q](spark, d).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            release_cached()
-            sp[q][n] = round(min(runs), 3)
+            runs = [run_query(spark, queries[q], d, drain="noop") for _ in range(reps)]
+            sp[q][n] = round(min(r["wall_s"] for r in runs), 3)
             print(f"spark {q} @{n}x: {sp[q][n]}s", file=sys.stderr)
 
     rows = {}

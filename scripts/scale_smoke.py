@@ -32,11 +32,17 @@ Usage:
     python scripts/scale_smoke.py [N] [name_substr...]   # default N=100;
     # name substrings filter SCALE_QUERIES (iteration/triage aid)
 
-Prints one JSON line: per-query seconds at sf0.1 and at N-times, and the
+Prints one JSON line: per-query seconds at sf0.1 and at N-times, the
 time ratio (ideal = N / cores' spare capacity; at this size, ~N/1 for
 single-stage scans down to well under N when the 1x run was
-overhead-bound). Queries execute via the "noop" sink so the measurement
-is the computation, not a driver-side collect of N-times more rows.
+overhead-bound), and under ``records`` each measured run's
+eventstream_spark.profile record (build/exec split, job counts, result
+rows, spill, shuffle-write and peak-memory bytes) — the numbers that
+attribute a superlinear ratio: flat work per row with spill going 0 -> GBs
+at 100x is a fixed-memory harness artifact (one JVM), while output rows or
+shuffle bytes growing faster than 100x is plan-inherent. Queries execute
+via the "noop" sink so the measurement is the computation, not a
+driver-side collect of N-times more rows.
 """
 
 from __future__ import annotations
@@ -44,7 +50,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -52,6 +57,7 @@ import pyspark.sql.functions as F
 from pyspark.sql.functions import col
 
 from eventstream_spark.operators import all_queries
+from eventstream_spark.profile import run_query
 from eventstream_spark.session import get_spark
 
 BASE = "/root/testdata/sf0.1"
@@ -511,23 +517,16 @@ def build_graph(spark, n: int) -> str:
     return out
 
 
-def _run(queries, name, spark, sf_dir) -> float:
-    from eventstream_spark.cache import release_cached
-
-    runs = []
-    for _ in range(2):
-        # Release operator-internal persists BEFORE each timed run: the
-        # second (warm-JIT) run must recompute the persisted lineage, not
-        # read the first run's cache — otherwise any query whose persist
-        # sits upstream of everything (q89b's token projection, the LSH
-        # bucket tables) measures a cache read instead of the plan. Found
-        # in round 7 when q89b's 100x run came back FASTER than 1x.
-        release_cached()
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(time.perf_counter() - t0)
-    release_cached()
-    return round(runs[-1], 3)  # warm: first run compiled the plan
+def _run(queries, name, spark, sf_dir) -> dict:
+    # Two runs, the second recorded (warm: the first compiled the plan at
+    # this scale). run_query releases operator-internal persists before
+    # each run, so the second recomputes the persisted lineage instead of
+    # reading the first run's cache — otherwise any query whose persist
+    # sits upstream of everything (q89b's token projection, the LSH bucket
+    # tables) measures a cache read instead of the plan. Found in round 7
+    # when q89b's 100x run came back FASTER than 1x.
+    run_query(spark, queries[name], sf_dir, drain="noop")
+    return run_query(spark, queries[name], sf_dir, drain="noop")
 
 
 def main() -> None:
@@ -546,21 +545,26 @@ def main() -> None:
         q for q in STREAM_QUERIES if not wanted or any(w in q for w in wanted)
     ]
     g_scaled = build_graph(spark, n) if g_selected else None
-    base_t, scaled_t, ratio, stream_info = {}, {}, {}, {}
-    for name in selected + g_selected:
-        sdir = g_scaled if name in g_selected else scaled
-        base_t[name] = _run(queries, name, spark, BASE)
-        scaled_t[name] = _run(queries, name, spark, sdir)
+    base_t, scaled_t, ratio, stream_info, records = {}, {}, {}, {}, {}
+
+    def measure(name, sdir):
+        rec = records[name] = {
+            "base": _run(queries, name, spark, BASE),
+            "scaled": _run(queries, name, spark, sdir),
+        }
+        base_t[name] = round(rec["base"]["wall_s"], 3)
+        scaled_t[name] = round(rec["scaled"]["wall_s"], 3)
         ratio[name] = round(scaled_t[name] / max(base_t[name], 1e-9), 1)
+
+    for name in selected + g_selected:
+        measure(name, g_scaled if name in g_selected else scaled)
     if s_selected:
         from eventstream_spark.operators import streaming_queries as sq
 
         os.environ["SPARK_GRAFT_STREAM_MAX_FILES"] = _STREAM_MAX_FILES
         try:
             for name in s_selected:
-                base_t[name] = _run(queries, name, spark, BASE)
-                scaled_t[name] = _run(queries, name, spark, scaled)
-                ratio[name] = round(scaled_t[name] / max(base_t[name], 1e-9), 1)
+                measure(name, scaled)
                 stream_info[name] = dict(sq.LAST_RUN_INFO)
         finally:
             os.environ.pop("SPARK_GRAFT_STREAM_MAX_FILES", None)
@@ -575,6 +579,7 @@ def main() -> None:
                 "base_total": round(sum(base_t.values()), 2),
                 "scaled_total": round(sum(scaled_t.values()), 2),
                 **({"streaming": stream_info} if stream_info else {}),
+                "records": records,
             }
         )
     )

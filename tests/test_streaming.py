@@ -15,10 +15,8 @@ import pytest
 
 from eventstream_spark.catalog import fix_nanos_ts, load, table_path
 from eventstream_spark.streaming import (
-    ROCKSDB_PROVIDER,
     barrier_batch_oracle,
     completion_barrier,
-    completion_barrier_tws,
     dedup_events,
     session_counts,
     sliding_counts,
@@ -169,76 +167,6 @@ def test_completion_barrier_stream_equals_batch(spark, tmp_path):
     assert not compare(got, batch), compare(got, batch)
     assert set(got["message_id"]) == {"m1"}
     assert list(got["n_consumers"]) == [3]
-
-
-def _has_tws_deps() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    _has_tws_deps(), reason="deps present — the real TWS test below runs instead"
-)
-def test_completion_barrier_tws_gates_without_protobuf(spark):
-    """Without protobuf/grpcio the TWS barrier must fail loud with guidance,
-    not crash the streaming driver worker mid-query."""
-    df = spark.createDataFrame([("m1", "c1")], "message_id string, consumer string")
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        completion_barrier_tws(df, ["c1", "c2"])
-
-
-@pytest.mark.skipif(
-    not _has_tws_deps(),
-    reason="transformWithState needs protobuf/grpcio (absent in this container)",
-)
-def test_completion_barrier_tws_equals_batch(spark, tmp_path):
-    """The transformWithStateInPandas barrier matches the batch oracle (and
-    therefore the applyInPandasWithState variant). Duplicate acks across
-    micro-batches must not double-fire the tombstoned barrier."""
-    src = tmp_path / "acks_tws"
-    src.mkdir()
-    pd.DataFrame(
-        {
-            "message_id": ["m1", "m1", "m2", "m3"],
-            "consumer": ["c1", "c2", "c1", "c2"],
-        }
-    ).to_parquet(src / "f1.parquet")
-    pd.DataFrame(
-        {
-            # completes m1 again (duplicate acks) and m2; m3 stays open
-            "message_id": ["m1", "m1", "m2"],
-            "consumer": ["c1", "c2", "c2"],
-        }
-    ).to_parquet(src / "f2.parquet")
-    schema = spark.read.parquet(str(src)).schema
-    required = ["c1", "c2"]
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
-        out = completion_barrier_tws(stream, required)
-        _run_to_memory(out, "barrier_tws_out", tmp_path)
-        got = spark.table("barrier_tws_out").toPandas()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    batch = barrier_batch_oracle(spark.read.parquet(str(src)), required).toPandas()
-    assert not compare(got, batch), compare(got, batch)
-    assert sorted(got["message_id"]) == ["m1", "m2"]
-    assert list(got["status"].unique()) == ["complete"]
-    assert len(got) == 2  # tombstone: duplicate ack set must not re-emit m1
 
 
 def test_completion_barrier_idle_timeout(spark, tmp_path):
