@@ -128,8 +128,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Progress of the most recent _run_to_table drain: n_batches, input rows,
-#: and the peak stateful-operator row count — the numbers a capacity plan
-#: needs (scripts/scale_smoke.py records them at 100x).
+#: the peak stateful-operator row count and the state-store count — the
+#: numbers a capacity plan needs (scripts/scale_smoke.py records them at
+#: 100x).
 LAST_RUN_INFO: dict = {}
 
 #: (session, memory-sink view, checkpoint dir) of every drain not yet
@@ -154,7 +155,15 @@ register_memo_clearer(_release_drained)
 def _run_to_table(agg: DataFrame, spark: SparkSession, mode: str = "complete") -> DataFrame:
     """Drain the stream with availableNow into a uniquely named in-memory
     table and return it as a batch DataFrame. The table and the checkpoint
-    dir live until the next ``cache.release_cached()``."""
+    dir live until the next ``cache.release_cached()``.
+
+    A stateful operator runs one state store per shuffle partition, and
+    every store pays a commit per micro-batch; with more stores than task
+    slots the state tasks run in waves. So the query starts with
+    ``spark.sql.shuffle.partitions`` capped at the default parallelism,
+    one store per slot (the session value stays the ceiling). The stream
+    copies the session conf when ``start()`` builds it and the checkpoint
+    then freezes the count, so the session value is restored right after."""
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="es_ckpt_")
     _DRAINED.append((spark, name, ckpt))
@@ -163,14 +172,22 @@ def _run_to_table(agg: DataFrame, spark: SparkSession, mode: str = "complete") -
     # in more micro-batches than that and LAST_RUN_INFO would silently
     # undercount. Raise the cap well past any drain this harness runs.
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    session_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(min(int(session_sp), spark.sparkContext.defaultParallelism)),
     )
+    try:
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", session_sp)
     q.awaitTermination(600)
     if q.isActive:
         # availableNow should have terminated; on a pathologically slow
@@ -193,6 +210,15 @@ def _run_to_table(agg: DataFrame, spark: SparkSession, mode: str = "complete") -
                 (
                     sum(int(so.numRowsTotal or 0) for so in (p.stateOperators or []))
                     for p in progs
+                ),
+                default=0,
+            ),
+            # State stores per stateful operator (0 for a stateless drain).
+            "state_partitions": max(
+                (
+                    int(so.numShufflePartitions or 0)
+                    for p in progs
+                    for so in (p.stateOperators or [])
                 ),
                 default=0,
             ),

@@ -7,7 +7,10 @@ Streaming: ONE ``readStream`` scan per bus fanned out to every route inside
 ``foreachBatch`` — the single-scan multi-sink pattern (reference A4: one
 consumer-group read dispatching to all handler lists; SURVEY §4.2 custom
 item 1). The micro-batch is persisted once so N routes don't re-read the
-source, and each sink write is append-mode idempotent per batch.
+source. Each sink write is a plain append in the sink's mode, NOT
+idempotent per batch: a micro-batch replayed after a crash is written
+again (``streaming/sinks.py:idempotent_parquet_sink`` is the replay-safe
+form, not yet used here).
 
 Scale: at 100 TB the per-route filters are pushed into the shared scan's
 row-group pruning when routes run as separate batch jobs; in the streaming

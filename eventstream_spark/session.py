@@ -32,7 +32,7 @@ def local_sizing(usable_cpus: int, host_mem_bytes: int) -> tuple[int, str]:
 def get_spark(
     app_name: str = "eventstream-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
@@ -47,10 +47,6 @@ def get_spark(
     )
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', cpus)}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -381,9 +381,10 @@ GRAPH_QUERIES = [
 # Streaming (availableNow file-source) pipelines, drained at 100x with
 # maxFilesPerTrigger bounding each micro-batch (SPARK_GRAFT_STREAM_MAX_FILES
 # — the catch-up knob a backlogged landing zone needs); per-run micro-batch
-# counts and peak stateful-operator rows are recorded alongside the timings
-# (streaming_queries.LAST_RUN_INFO). State stays bounded by construction:
-# these aggregate into per-source / per-bucket grids, never per-row state.
+# counts, peak stateful-operator rows and state-store counts are recorded
+# alongside the timings (streaming_queries.LAST_RUN_INFO). State stays
+# bounded by construction: these aggregate into per-source / per-bucket
+# grids, never per-row state.
 STREAM_QUERIES = [
     # q244 streaming decontamination: frozen benchmark window set in a
     # UDF closure, per-doc hits map-side, |sources|x4 additive state.

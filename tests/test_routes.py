@@ -217,6 +217,51 @@ def test_streaming_fanout_equals_batch(spark, sf_dir, tmp_path, monkeypatch):
     assert spark.read.parquet(str(tmp_path / "stream_clicks")).count() == want.count()
 
 
+def test_stock_transforms_add_their_columns(spark, sf_dir):
+    """The stock handlers in plans/transforms.py, each run as a route
+    transform: forward stamps the target stream (A9), identity passes the
+    routed rows through, extract_prop types one props path, tag_workflow
+    fills the workflow id."""
+    import json
+
+    from eventstream_spark.plans.config import BusConfig, RouteConfig, TransformRef
+
+    def route(name, transform=None, **kwargs):
+        ref = TransformRef("eventstream_spark.plans.transforms", transform) if transform else None
+        return RouteConfig(name=name, event="purchase", transform=ref, kwargs=kwargs)
+
+    cfg = EngineConfig(
+        application_name="t-app",
+        application_instance="i-1",
+        busses=(
+            BusConfig(
+                name="ev",
+                source_table="events",
+                routes=(
+                    route("plain"),
+                    route("forward", "forward", target_stream="audit"),
+                    route("identity", "identity"),
+                    route("extract_prop", "extract_prop", path="k", alias="k_value"),
+                    route("tag_workflow", "tag_workflow", workflow_id="wf-7"),
+                ),
+            ),
+        ),
+    )
+    routes = compile_bus(spark, cfg, cfg.busses[0], sf_dir)
+    raw = load(spark, sf_dir, "events").where(col("event_type") == "purchase")
+    want_k = {str(r.event_id): json.loads(r.props)["k"] for r in raw.collect()}
+    assert want_k
+
+    def rows(name, *cols):
+        return {r.message_id: tuple(r)[1:] for r in routes[name].select("message_id", *cols).collect()}
+
+    assert rows("forward", "target_stream") == {m: ("audit",) for m in want_k}
+    assert routes["identity"].columns == routes["plain"].columns
+    assert rows("identity", "event", "ts", "value") == rows("plain", "event", "ts", "value")
+    assert rows("extract_prop", "k_value") == {m: (k,) for m, k in want_k.items()}
+    assert rows("tag_workflow", "workflow_id") == {m: ("wf-7",) for m in want_k}
+
+
 def test_group_naming_broadcast_vs_compete(tmp_path):
     from eventstream_spark.plans.config import checkpoint_dir_for, generate_group_name
 

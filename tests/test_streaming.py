@@ -266,6 +266,18 @@ def test_stream_topk_state_spans_batches(spark, sf_dir):
     assert len(chunks) > 1
 
 
+def _land(df, land_dir, tmp_path, name):
+    """Write ``df`` as one parquet file and move it into ``land_dir``
+    whole, the way a producer lands a file for the file source."""
+    import glob
+    import os
+
+    stage = str(tmp_path / f"stage_{name}")
+    df.coalesce(1).write.parquet(stage)
+    part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
+    os.rename(part, str(land_dir / f"{name}.parquet"))
+
+
 def test_file_sink_exactly_once_across_doctored_restart(spark, sf_dir, tmp_path):
     """Sink-side twin of the doctored SOURCE restart test
     (test_redis_source.test_drain_available_now_reaches_end_across_
@@ -277,7 +289,6 @@ def test_file_sink_exactly_once_across_doctored_restart(spark, sf_dir, tmp_path)
     data exactly-once afterwards. The crash is manufactured exactly as
     the source test does it: commits/N (and its .crc sidecar) deleted,
     offsets/N left in place."""
-    import glob
     import os
 
     import pyspark.sql.functions as F
@@ -286,14 +297,8 @@ def test_file_sink_exactly_once_across_doctored_restart(spark, sf_dir, tmp_path)
     land.mkdir()
     ev = load(spark, sf_dir, "events").where(F.col("event_id") < 40)
 
-    def add_file(df, name):
-        stage = str(tmp_path / f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        os.rename(part, str(land / f"{name}.parquet"))
-
     for i in range(4):  # 4 files -> 4 micro-batches at maxFilesPerTrigger=1
-        add_file(ev.where(F.col("event_id") % 4 == i), f"c{i}")
+        _land(ev.where(F.col("event_id") % 4 == i), land, tmp_path, f"c{i}")
 
     schema = spark.read.parquet(str(land)).schema
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -335,7 +340,7 @@ def test_file_sink_exactly_once_across_doctored_restart(spark, sf_dir, tmp_path)
     extra = load(spark, sf_dir, "events").where(
         (F.col("event_id") >= 40) & (F.col("event_id") < 50)
     )
-    add_file(extra, "c4")
+    _land(extra, land, tmp_path, "c4")
     run()
     final = spark.read.parquet(out)
     assert final.count() == n0 + 10
@@ -426,3 +431,94 @@ def test_run_to_table_state_released_by_release_cached(spark, sf_dir):
         assert df.collect()
         release_cached()
         assert footprint() == before
+
+
+def test_run_to_table_runs_one_state_store_per_task_slot(spark, sf_dir):
+    """_run_to_table starts each stateful drain with the shuffle-partition
+    count capped at the default parallelism (one state store per task
+    slot), and the session's own value reads back unchanged afterwards,
+    also when start() raises; the drained result still equals the
+    oracle."""
+    from pyspark.errors import AnalysisException
+
+    from eventstream_spark.operators import all_oracles
+    from eventstream_spark.operators.streaming_queries import (
+        LAST_RUN_INFO,
+        _events_stream,
+        _run_to_table,
+        q90_stream_hourly,
+    )
+    from eventstream_spark.testing import assert_matches_oracle
+
+    key = "spark.sql.shuffle.partitions"
+    session_sp = spark.conf.get(key)
+    df = q90_stream_hourly(spark, sf_dir)
+    assert LAST_RUN_INFO["state_partitions"] == min(
+        int(session_sp), spark.sparkContext.defaultParallelism
+    )
+    assert spark.conf.get(key) == session_sp
+    assert_matches_oracle(df, all_oracles()["q90_stream_hourly"], sf_dir)
+
+    # An aggregation without a watermark cannot run in append mode: the
+    # plan is rejected inside start().
+    agg = _events_stream(spark, sf_dir).groupBy("event_type").count()
+    with pytest.raises(AnalysisException):
+        _run_to_table(agg, spark, mode="append")
+    assert spark.conf.get(key) == session_sp
+
+
+def test_restarted_checkpoint_keeps_its_state_partition_count(spark, sf_dir, tmp_path):
+    """A checkpoint freezes its state-store count at first start, which is
+    what lets _run_to_table restore the session value right after
+    start(): restarted under a larger session value, the stream keeps the
+    stores it began with, and the aggregate equals the batch answer."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    key = "spark.sql.shuffle.partitions"
+    session_sp = spark.conf.get(key)
+    ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    land = tmp_path / "land"
+    land.mkdir()
+    _land(ev.where(F.col("event_id") % 2 == 0), land, tmp_path, "a")
+    schema = spark.read.parquet(str(land)).schema
+    ckpt = str(tmp_path / "ckpt")
+
+    def counts(df):
+        # integer cents: the sum is exact in any order of partial sums
+        cents = F.round(F.col("value") * 100).cast("long")
+        return df.groupBy("event_type").agg(
+            F.count("*").alias("n"), F.sum(cents).alias("cents")
+        )
+
+    def drain():
+        q = (
+            counts(spark.readStream.schema(schema).parquet(str(land)))
+            .writeStream.format("memory")
+            .queryName("restart_counts")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        assert not q.isActive
+
+    def state_dirs():
+        return sorted(d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit())
+
+    try:
+        spark.conf.set(key, "2")
+        drain()
+        assert state_dirs() == ["0", "1"]
+        spark.conf.set(key, "8")
+        _land(ev.where(F.col("event_id") % 2 == 1), land, tmp_path, "b")
+        drain()
+    finally:
+        spark.conf.set(key, session_sp)
+    assert state_dirs() == ["0", "1"]
+    got = spark.table("restart_counts").toPandas()
+    spark.catalog.dropTempView("restart_counts")
+    want = counts(ev).toPandas()
+    assert not compare(got, want), compare(got, want)
