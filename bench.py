@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from eventstream_spark.operators import all_queries
 from eventstream_spark.profile import run_query
-from eventstream_spark.session import get_spark
+from eventstream_spark.session import get_spark, session_sizing
 
 # Headline set: scan/agg, filter, joins (broadcast + shuffle + theta),
 # correlation, windows, set-op, dedup family, similarity family, text.
@@ -318,7 +318,7 @@ def main() -> None:
 
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_layers.json"), "w") as fh:
-        json.dump({"sf": sf, "queries": layers}, fh, indent=1)
+        json.dump({"sf": sf, **session_sizing(spark), "queries": layers}, fh, indent=1)
 
     # Field ORDER is part of the artifact contract: the driver's capture
     # tails the line with a bounded buffer, so the PRIMARY per-query dict

@@ -119,7 +119,7 @@ def _jac_partitions(docs: DataFrame) -> int:
         est_rows = int(total) // 6
     else:
         est_rows = int(docs.agg(F.sum(F.size(tokens("text")))).head()[0] or 0)
-    base = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    base = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return max(base, -(-est_rows // _JAC_ROWS_PER_TASK))
 
 
@@ -248,9 +248,7 @@ def jaccard_pairs(
     # bench scale the corpus-derived count stays at the session default —
     # skip the explicit repartitions entirely there (they would be
     # redundant exchanges on top of the window's/aggregate's own).
-    base_parts = int(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    base_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n_parts = _jac_partitions(docs)
     grow = n_parts > base_parts
     if grow:
@@ -1196,7 +1194,7 @@ def _sfx_partitions(docs: DataFrame) -> int:
         est_rows = int(
             docs.agg(F.sum(F.size(tokens("text")))).head()[0] or 0
         )
-    base = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    base = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return max(base, -(-est_rows // _SFX_ROWS_PER_TASK))
 
 

@@ -1085,7 +1085,7 @@ def q225_stream_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     sdocs = file_stream(spark, d, schema, max_files_per_trigger=1)
-    n_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if int(trow["v"]) <= _DOREMI_BCAST_VOCAB_CAP:
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
@@ -1180,7 +1180,7 @@ def q231_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are unsplittable units, so an ingest gate repartitions to workers
     # before per-doc model work. The tiny text shuffle is the price; the
     # per-source sums are additive, so the answer is unchanged.
-    n_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
     scored = sdocs.repartition(n_sp).select(
         "source", tokens("text").alias("w")
     ).select("source", classifier_logit_micro().alias("lm"))
@@ -1363,7 +1363,7 @@ def q244_stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window build + set probe (the q231 ingest-gate convention: arrival
     # files are unsplittable units; the per-source sums are additive, so
     # the exchange never changes the answer).
-    n_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
     scored = (
         sdocs.where(col("doc_id") % 50 != 0)
         .repartition(n_sp)

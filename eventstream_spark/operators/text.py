@@ -1200,9 +1200,7 @@ def bm25_rankings(docs: DataFrame) -> DataFrame:
         return hit.out
     spark = docs.sparkSession
     tok = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-    base_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    base_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Round 13 (guide §1.2): the free n_chars pre-gate probe also carries
     # the doc count in the SAME job, so n_docs becomes a plan literal —
     # the former consts leg paid its own parquet scan + a broadcast

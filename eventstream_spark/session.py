@@ -12,9 +12,12 @@ the DataFrame API so Catalyst/AQE own the physical planning.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
+# Shuffle partitions for a master whose task slots are not known here (a
+# cluster; spark-submit or extra_conf sizes them per workload).
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
@@ -29,10 +32,29 @@ def local_sizing(usable_cpus: int, host_mem_bytes: int) -> tuple[int, str]:
     return max(1, usable_cpus), f"{heap_mb}m"
 
 
+def shuffle_partitions_for(master: str) -> int:
+    """Default shuffle partitions: one per task slot.
+
+    ``local[N]`` (or ``local[N,F]``) runs N tasks at a time, so a shuffle
+    into N partitions runs in one wave. Any other master keeps
+    ``DEFAULT_SHUFFLE_PARTITIONS``."""
+    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", master)
+    return int(m.group(1)) if m else DEFAULT_SHUFFLE_PARTITIONS
+
+
+def session_sizing(spark: SparkSession) -> dict[str, int]:
+    """The task slots and shuffle partitions a live session runs at, for
+    measurement records taken on hosts of different sizes."""
+    return {
+        "cores": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    }
+
+
 def get_spark(
     app_name: str = "eventstream-spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
+    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
@@ -40,6 +62,8 @@ def get_spark(
     Local test/bench runs use ``local[$SPARK_GRAFT_CPUS]`` and a heap of
     ``$SPARK_GRAFT_DRIVER_MEM``; each unset one defaults from the host
     (:func:`local_sizing`). On a cluster spark-submit owns both.
+    ``shuffle_partitions`` defaults to one per task slot
+    (:func:`shuffle_partitions_for`).
     """
     cpus, heap = local_sizing(
         len(os.sched_getaffinity(0)),
@@ -47,6 +71,8 @@ def get_spark(
     )
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', cpus)}]"
+    if shuffle_partitions is None:
+        shuffle_partitions = shuffle_partitions_for(master)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -65,14 +91,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Shuffle-partition sizing: measured, not assumed. A/B at the 100x
-        # smoke on q158 (the one spilling query): initialPartitionNum=256
-        # halves the agg spill (19.3 -> 10.7 GB) but DOUBLES shuffle bytes
-        # (worse per-segment compression) and wall clock (43 -> 105 s) on
-        # this one-JVM harness, where spill goes to local NVMe. So the
-        # static 32 stays (extra_conf overrides it); on a real cluster
-        # shuffle.partitions is sized per workload (SCALING.md "Outlier
-        # triage", round-6 pass).
+        # Shuffle-partition sizing: one partition per task slot, so every
+        # shuffle stage runs in one wave (Drizzle's per-task fixed cost;
+        # SCALING.md "Shuffle budget"). More partitions than slots was
+        # measured and lost: at the 100x smoke on q158 (the one spilling
+        # query, 32 cores) initialPartitionNum=256 halved the agg spill
+        # (19.3 -> 10.7 GB) but DOUBLED shuffle bytes (worse per-segment
+        # compression) and wall clock (43 -> 105 s) on this one-JVM
+        # harness, where spill goes to local NVMe. extra_conf overrides
+        # both keys; on a real cluster they are sized per workload.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(shuffle_partitions),

@@ -58,7 +58,7 @@ from pyspark.sql.functions import col
 
 from eventstream_spark.operators import all_queries
 from eventstream_spark.profile import run_query
-from eventstream_spark.session import get_spark
+from eventstream_spark.session import get_spark, session_sizing
 
 BASE = "/root/testdata/sf0.1"
 
@@ -574,6 +574,7 @@ def main() -> None:
             {
                 "metric": "scale_smoke",
                 "scale": n,
+                **session_sizing(spark),
                 "base_sec": base_t,
                 "scaled_sec": scaled_t,
                 "time_ratio": ratio,

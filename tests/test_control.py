@@ -56,6 +56,29 @@ def test_manager_stop_all(spark, tmp_path):
         mgr.purge(name, drop_checkpoint=True)
 
 
+def test_manager_info_all_reports_every_registered_query(spark, tmp_path):
+    """A11 print_instance_info: one QueryInfo per registered name, stopped
+    queries included, each with its own activity flag."""
+    mgr = QueryManager(spark)
+    for i in range(2):
+        ckpt = str(tmp_path / f"ckpt_all{i}")
+        running = mgr.register(
+            f"app:i{i}", _start_rate_query(spark, f"qall{i}", ckpt), ckpt
+        )
+    try:
+        assert mgr.stop("app:i0") is True
+        infos = mgr.info_all()
+        assert sorted(infos) == ["app:i0", "app:i1"]
+        assert infos["app:i0"].is_active is False
+        assert infos["app:i1"].is_active is True
+        assert infos["app:i1"].name == "qall1"
+        assert infos["app:i1"].query_id == str(running.id)
+    finally:
+        mgr.stop_all()
+        for name in mgr.names():
+            mgr.purge(name, drop_checkpoint=True)
+
+
 def test_trim_and_archive_keeps_newest(spark, sf_dir, tmp_path):
     events = load(spark, sf_dir, "events")
     total = events.count()

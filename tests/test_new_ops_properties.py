@@ -46,16 +46,14 @@ def test_sweep_concurrency_matches_brute_force(spark, seed):
     assert got == {t: brute(iv) for t, iv in intervals.items()}
 
 
-def test_morton_interleave_is_bijective_and_positional():
+def test_morton_interleave_is_bijective_and_positional(spark):
     """_interleave_bits maps 32x32 bucket pairs to 1024 DISTINCT z-values,
     and bit j of x lands at z bit 2j (y at 2j+1) — the property that makes
     z-range prefixes axis-aligned boxes."""
     import pyspark.sql.functions as F
 
     from eventstream_spark.operators.merge import _interleave_bits
-    from eventstream_spark.session import get_spark
 
-    spark = get_spark()
     df = (
         spark.range(32)
         .select(F.col("id").alias("x"))
