@@ -1198,6 +1198,39 @@ def _sfx_partitions(docs: DataFrame) -> int:
     return max(base, -(-est_rows // _SFX_ROWS_PER_TASK))
 
 
+def _spark_hash_int(v: int) -> int:
+    """Spark's ``hash()`` of an IntegerType value: Murmur3_x86_32
+    ``hashInt`` with seed 42, as a signed 32-bit int. Hash partitioning
+    sends a row to ``pmod(hash(keys), numPartitions)``."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h & 0x80000000 else h
+
+
+def _partition_keys(n: int) -> list[int]:
+    """``keys[p]`` is the smallest non-negative int that hash partitioning
+    into ``n`` partitions sends to partition ``p``: tagging range partition
+    ``p`` with ``keys[p]`` makes a later ``repartition(n, tag)`` map range
+    partitions to hash partitions one to one. Tagging with the partition
+    id itself collides: ids 0..3 hash into only 2 of 4 partitions, 0..31
+    into 18 of 32."""
+    keys: dict[int, int] = {}
+    v = 0
+    while len(keys) < n:
+        keys.setdefault(_spark_hash_int(v) % n, v)
+        v += 1
+    return [keys[p] for p in range(n)]
+
+
 def suffix_repeat_lengths(
     docs: DataFrame, depth: int = _SFX_DEPTH, n_parts: int | None = None
 ) -> DataFrame:
@@ -1290,16 +1323,25 @@ def suffix_repeat_lengths(
     # (key + both neighbors) and the DISK_ONLY materialization is the
     # adjudicated wall; the columnar codec does not recover the 3×. The
     # narrow unsorted cache below stays; the window runs in the consumer
-    # pass (its 1:1 hashpartitioning(_pid) exchange is the price of
+    # pass (its hashpartitioning(_pid) exchange is the price of
     # partition-aligned windows over a cached range partitioning).
+    # _pid tags each range partition with a key that hash partitioning into
+    # n_parts sends to a partition of its own (_partition_keys), so that
+    # exchange is one to one. Tagged with the raw partition id, the window
+    # pass ran 3 of 4 range partitions in one task at 4 partitions (q219
+    # at sf0.1 on 4 cores: 4.5 -> 7.2 s against 32 partitions).
+    pkeys = _partition_keys(n_parts)
+    rank = {k: p for p, k in enumerate(pkeys)}
     rp = persist_tracked(
         suf.repartitionByRange(n_parts, "key", "doc_id", "pos").withColumn(
-            "_pid", F.spark_partition_id()
+            "_pid",
+            F.element_at(F.array(*map(lit, pkeys)), F.spark_partition_id() + 1),
         ),
         level=StorageLevel.DISK_ONLY,
     )
+    # Range order of the partitions, by partition id (not by tag).
     edges = sorted(
-        (r["_pid"], r["fst"]["key"], r["lst"]["key"])
+        (rank[r["_pid"]], r["_pid"], r["fst"]["key"], r["lst"]["key"])
         for r in rp.groupBy("_pid")
         .agg(
             F.min(F.struct("key", "doc_id", "pos")).alias("fst"),
@@ -1309,11 +1351,11 @@ def suffix_repeat_lengths(
     )
     prev_last: dict[int, str] = {}
     next_first: dict[int, str] = {}
-    for i, (pid, fk, lk) in enumerate(edges):
+    for i, (_, pid, fk, lk) in enumerate(edges):
         if i > 0:
-            prev_last[pid] = edges[i - 1][2]
+            prev_last[pid] = edges[i - 1][3]
         if i < len(edges) - 1:
-            next_first[pid] = edges[i + 1][1]
+            next_first[pid] = edges[i + 1][2]
 
     def pid_case(d: dict[int, str]):
         if not d:
@@ -1341,7 +1383,7 @@ def suffix_repeat_lengths(
     # LCP projection reference the attributes plans exactly one lag and
     # one lead (after-plan: 2 windowspecdefinitions).
     w = Window.partitionBy("_pid").orderBy("key", "doc_id", "pos")
-    nbr = rp.select(
+    nbr = rp.repartition(n_parts, "_pid").select(
         "doc_id",
         "source",
         "pos",

@@ -159,11 +159,13 @@ def _run_to_table(agg: DataFrame, spark: SparkSession, mode: str = "complete") -
 
     A stateful operator runs one state store per shuffle partition, and
     every store pays a commit per micro-batch; with more stores than task
-    slots the state tasks run in waves. So the query starts with
-    ``spark.sql.shuffle.partitions`` capped at the default parallelism,
-    one store per slot (the session value stays the ceiling). The stream
-    copies the session conf when ``start()`` builds it and the checkpoint
-    then freezes the count, so the session value is restored right after."""
+    slots the state tasks run in waves. ``get_spark``'s default is already
+    one partition per slot; this cap is the guard for a session built with
+    more (an explicit ``shuffle_partitions=``, as tier-1's 8 on fewer
+    cores): the query starts with ``spark.sql.shuffle.partitions`` capped
+    at the default parallelism, one store per slot. The stream copies the
+    session conf when ``start()`` builds it and the checkpoint then
+    freezes the count, so the session value is restored right after."""
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="es_ckpt_")
     _DRAINED.append((spark, name, ckpt))

@@ -93,13 +93,15 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Shuffle-partition sizing: one partition per task slot, so every
         # shuffle stage runs in one wave (Drizzle's per-task fixed cost;
-        # SCALING.md "Shuffle budget"). More partitions than slots was
-        # measured and lost: at the 100x smoke on q158 (the one spilling
-        # query, 32 cores) initialPartitionNum=256 halved the agg spill
-        # (19.3 -> 10.7 GB) but DOUBLED shuffle bytes (worse per-segment
-        # compression) and wall clock (43 -> 105 s) on this one-JVM
-        # harness, where spill goes to local NVMe. extra_conf overrides
-        # both keys; on a real cluster they are sized per workload.
+        # SCALING.md "Shuffle budget"). Measured on 4 cores, 32 -> 4
+        # partitions: perfbench corpus pass 4.99 -> 2.95 s. At the 100x
+        # smoke on 32 cores, q158 (the one spilling query) with
+        # initialPartitionNum=256 against 32 halved the agg spill
+        # (19.3 -> 10.7 GB) but doubled shuffle bytes and wall clock
+        # (43 -> 105 s). Stages whose work grows with the data size their
+        # own exchanges (dedup._sfx_partitions and kin). extra_conf
+        # overrides both keys; on a real cluster they are sized per
+        # workload.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(shuffle_partitions),

@@ -618,6 +618,31 @@ def test_suffix_repeat_lengths_vs_bruteforce(spark, sf_dir):
     assert n_dup > 0  # the fixture's near-dup docs guarantee real repeats
 
 
+def test_suffix_window_exchange_is_one_to_one(spark):
+    """The suffix stage tags range partition p with _partition_keys(n)[p]
+    and hash-repartitions on the tag into n partitions before its window:
+    every tag must land in its own partition. The Python port of Spark's
+    int hash must agree with F.hash, extremes included, and the raw
+    partition ids must NOT be one to one (the collision the tags avoid)."""
+    import pyspark.sql.functions as F
+
+    from eventstream_spark.operators.dedup import _partition_keys, _spark_hash_int
+
+    vals = list(range(-300, 300)) + [2**31 - 1, -(2**31), 123_456_789]
+    got = spark.createDataFrame([(v,) for v in vals], "v int").select(F.hash("v"))
+    assert [r[0] for r in got.collect()] == [_spark_hash_int(v) for v in vals]
+
+    def landing(tags: list[int], n: int) -> list[int]:
+        df = spark.createDataFrame([(t,) for t in tags], "t int")
+        rows = df.repartition(n, "t").select("t", F.spark_partition_id()).collect()
+        where = {r[0]: r[1] for r in rows}
+        return [where[t] for t in tags]
+
+    for n in (1, 3, 4, 25, 32):
+        assert landing(_partition_keys(n), n) == list(range(n)), n
+    assert len(set(landing(list(range(4)), 4))) < 4
+
+
 def test_q217b_grown_geometry(spark, sf_dir):
     """q217b: the corpus-derived IVF geometry follows the pinned rules
     (cells = ceil(sqrt N), probes = max(2, ceil(log2(cells+1)))), and the
