@@ -3,9 +3,10 @@
 Most streaming semantics are verified by the streaming≡batch pytest suite
 (tests/test_streaming.py); these queries additionally run REAL Structured
 Streaming pipelines (file source → stateful op → availableNow → memory
-sink) under the external driver's oracle gate: with ``complete`` output
-mode over a fully drained source, the streaming result equals the batch
-computation, so the duckdb oracle of the batch twin applies verbatim.
+sink; q115/q115b: live wire source → stateful op → memory sink, drained
+while the feed publishes) under the duckdb oracle gate: with ``complete``
+output mode over a fully drained source, the streaming result equals the
+batch computation, so the oracle of the batch twin applies verbatim.
 
 Reference parity: this is the A1→A5→A7 spine (poll loop → route filter →
 emit) executed by the micro-batch engine instead of the reference's
@@ -25,9 +26,13 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import TimeoutError as FutureTimeout
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.functions import col, lit
 
 from ..cache import register_memo_clearer
@@ -151,11 +156,62 @@ def _release_drained() -> None:
 
 register_memo_clearer(_release_drained)
 
+_DRAIN_TIMEOUT_S = 600
 
-def _run_to_table(agg: DataFrame, spark: SparkSession, mode: str = "complete") -> DataFrame:
-    """Drain the stream with availableNow into a uniquely named in-memory
-    table and return it as a batch DataFrame. The table and the checkpoint
-    dir live until the next ``cache.release_cached()``.
+
+def _drain_live(q: StreamingQuery, feed: Callable[[], None]) -> None:
+    """Run ``feed`` while ``q`` is live, then wait (bounded) until ``q`` has
+    processed everything the feed published, and stop it. The wait runs on
+    a helper thread because ``processAllAvailable`` takes no timeout;
+    ``stop()`` releases it."""
+    waiter = ThreadPoolExecutor(max_workers=1)
+    try:
+        feed()
+        done = waiter.submit(q.processAllAvailable)
+        try:
+            done.result(timeout=_DRAIN_TIMEOUT_S)
+        except FutureTimeout:
+            raise TimeoutError(
+                f"wire drain did not finish within {_DRAIN_TIMEOUT_S}s"
+            ) from None
+    finally:
+        q.stop()
+        waiter.shutdown()
+
+
+def _run_to_table(
+    agg: DataFrame,
+    spark: SparkSession,
+    mode: str = "complete",
+    feed: Callable[[], None] | None = None,
+) -> DataFrame:
+    """Drain the stream into a uniquely named in-memory table and return it
+    as a batch DataFrame. The table and the checkpoint dir live until the
+    next ``cache.release_cached()``.
+
+    Two drains, one per kind of source:
+
+    - ``feed`` is None (the file sources): ``trigger(availableNow=True)``
+      plans every file in the landing dir at start and the query
+      terminates when they are done.
+    - ``feed`` given (the wire source, q115/q115b): the query starts on
+      the default trigger BEFORE anything is published, ``feed()`` then
+      publishes, and ``processAllAvailable()`` + ``stop()`` finish the
+      drain. A Python source's stream start spawns a fresh source-runner
+      process (1.4–1.8 s on 4 cores, SCALING.md), so starting the
+      consumer first hides that start behind the producer. The Python
+      reader cannot honour availableNow anyway (``sources/redis_stream.py``
+      docstring). The feed's writes are acknowledged before
+      ``processAllAvailable()`` is called, and that call returns only
+      after a later trigger found no new data, so every published entry is
+      in the table. The first trigger may see part of the feed; complete
+      mode over all batches still equals the batch answer. If ``feed``
+      raises, the query is stopped and the error propagates; a failed
+      stream raises its exception.
+
+    Either drain waits at most ``_DRAIN_TIMEOUT_S`` and then stops the
+    query and raises ``TimeoutError``: a partial in-memory table must not
+    masquerade as the full drain inside oracle gates / SCALE_SMOKE timings.
 
     A stateful operator runs one state store per shuffle partition, and
     every store pays a commit per micro-batch; with more stores than task
@@ -179,24 +235,27 @@ def _run_to_table(agg: DataFrame, spark: SparkSession, mode: str = "complete") -
         "spark.sql.shuffle.partitions",
         str(min(int(session_sp), spark.sparkContext.defaultParallelism)),
     )
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+    )
+    if feed is None:
+        writer = writer.trigger(availableNow=True)
     try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.start()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", session_sp)
-    q.awaitTermination(600)
-    if q.isActive:
-        # availableNow should have terminated; on a pathologically slow
-        # host a partial in-memory table must not masquerade as the full
-        # drain inside oracle gates / SCALE_SMOKE timings.
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 600s")
+    if feed is None:
+        q.awaitTermination(_DRAIN_TIMEOUT_S)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError(
+                f"availableNow drain did not finish within {_DRAIN_TIMEOUT_S}s"
+            )
+    else:
+        _drain_live(q, feed)
     progs = q.recentProgress or []
     LAST_RUN_INFO.clear()
     batch_ms = [
@@ -492,32 +551,35 @@ def q105_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_start")
 
 
-def _redis_hourly(spark: SparkSession, sf_dir: str, n_shards: int) -> DataFrame:
+def _publish(client, shards: dict[str, list[dict[str, str]]]) -> None:
+    """Pipelined XADD of every shard's entries, shard by shard."""
+    for stream, entries in shards.items():
+        client.xadd_many(stream, entries)
+
+
+def _redis_hourly(
+    spark: SparkSession, sf_dir: str, n_shards: int, publish=_publish
+) -> DataFrame:
     """Shared body of q115/q115b: feed the events fixture into ``n_shards``
     in-process RESP2 streams (round-robin — a stand-in for any producer-side
     shard key), ingest them back through ONE ``rediswire`` streaming query,
-    and run q90's hourly aggregation on the union."""
+    and run q90's hourly aggregation on the union.
+
+    The consumer starts before its producer: the query is started first
+    and the fixture is collected and published while the source runner
+    comes up (``_run_to_table``'s wire drain). ``publish(client, shards)``
+    does the XADDs; its default writes each shard in one pipelined pass."""
     from ..catalog import load
     from ..sources.redis_stream import RedisStreamClient, register_rediswire
     from ..sources.resp_server import FakeRedisServer
 
     names = [f"EVENTS{i}" for i in range(n_shards)] if n_shards > 1 else ["EVENTS"]
-    feed = (
-        load(spark, sf_dir, "events")
-        .select("event_type", F.unix_micros(col("ts")).alias("us"), "value")
-        .collect()
+    # load() pins the session to UTC; keep that ahead of the stream start.
+    events = load(spark, sf_dir, "events").select(
+        "event_type", F.unix_micros(col("ts")).alias("us"), "value"
     )
     server = FakeRedisServer()
     try:
-        with RedisStreamClient("127.0.0.1", server.port) as c:
-            for i, name in enumerate(names):
-                c.xadd_many(
-                    name,
-                    [
-                        {"event": r.event_type, "ts_us": str(r.us), "value": repr(r.value)}
-                        for r in feed[i::len(names)]
-                    ],
-                )
         register_rediswire(spark)
         stream = (
             spark.readStream.format("rediswire")
@@ -536,7 +598,20 @@ def _redis_hourly(spark: SparkSession, sf_dir: str, n_shards: int) -> DataFrame:
         agg = typed.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
             F.count("*").alias("cnt"), F.sum("value").alias("sv")
         )
-        out = _run_to_table(agg, spark)
+
+        def feed() -> None:
+            rows = events.collect()
+            shards = {
+                name: [
+                    {"event": r.event_type, "ts_us": str(r.us), "value": repr(r.value)}
+                    for r in rows[i::len(names)]
+                ]
+                for i, name in enumerate(names)
+            }
+            with RedisStreamClient("127.0.0.1", server.port) as c:
+                publish(c, shards)
+
+        out = _run_to_table(agg, spark, feed=feed)
     finally:
         server.close()
     return out.select(

@@ -7,10 +7,12 @@ Streaming: ONE ``readStream`` scan per bus fanned out to every route inside
 ``foreachBatch`` — the single-scan multi-sink pattern (reference A4: one
 consumer-group read dispatching to all handler lists; SURVEY §4.2 custom
 item 1). The micro-batch is persisted once so N routes don't re-read the
-source. Each sink write is a plain append in the sink's mode, NOT
-idempotent per batch: a micro-batch replayed after a crash is written
-again (``streaming/sinks.py:idempotent_parquet_sink`` is the replay-safe
-form, not yet used here).
+source, and the N sink writes run concurrently from a small thread pool
+(each write's jobs keep the stream's job group); the batch is unpersisted
+after the last one finishes. Each sink write is a plain append in the
+sink's mode, NOT idempotent per batch: a micro-batch replayed after a
+crash is written again (``streaming/sinks.py:idempotent_parquet_sink``
+is the replay-safe form, not yet used here).
 
 Scale: at 100 TB the per-route filters are pushed into the shared scan's
 row-group pruning when routes run as separate batch jobs; in the streaming
@@ -20,6 +22,9 @@ fan-out the single persisted micro-batch bounds memory by trigger size
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.functions import col
 from pyspark.storagelevel import StorageLevel
@@ -75,6 +80,27 @@ def _write_batch(df: DataFrame, sink: SinkConfig, batch_tag: str | None = None) 
         df.createOrReplaceGlobalTempView(sink.target)
     else:  # pragma: no cover - config validation rejects earlier
         raise ValueError(f"unknown sink kind {sink.kind!r}")
+
+
+def _write_routes(batch_df: DataFrame, routes, batch_tag: str) -> None:
+    """Write every route's sink from one micro-batch, concurrently: the
+    writes share nothing but the persisted batch, so their jobs overlap
+    instead of each waiting for the previous write to finish. Each
+    writer thread inherits the calling thread's local properties
+    (``inheritable_thread_target``), so its jobs stay in the stream's job
+    group and ``StreamingQuery.stop()`` cancels them. Returns once every
+    write has finished; the first failed route (in route order) raises."""
+    spark = batch_df.sparkSession
+
+    @inheritable_thread_target(spark)
+    def write(route: RouteConfig) -> None:
+        _write_batch(_apply_route(batch_df, route), route.sink, batch_tag)
+
+    workers = min(len(routes), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=max(1, workers)) as pool:
+        futures = [pool.submit(write, route) for route in routes]
+    for f in futures:
+        f.result()
 
 
 def run_batch(spark: SparkSession, cfg: EngineConfig, sf_dir: str) -> dict[str, int]:
@@ -135,8 +161,7 @@ def start_streaming(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            for route in bus.routes:
-                _write_batch(_apply_route(batch_df, route), route.sink, str(batch_id))
+            _write_routes(batch_df, bus.routes, str(batch_id))
         finally:
             batch_df.unpersist()
 

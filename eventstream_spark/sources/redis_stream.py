@@ -42,15 +42,24 @@ MicroBatchStream + AcceptsLatestSeenOffset only — verified against the
 Spark 4.1 jar — so neither DataSourceStreamReader nor
 SimpleDataSourceStreamReader can opt in from the Python side), and
 ``trigger(availableNow=True)`` falls back to SINGLE-BATCH execution — one
-batch covering (checkpointed offset, latestOffset-at-start]. With a fresh
-checkpoint that is a full drain (what q115/q115b rely on); when RESTARTING
-from a checkpoint that has an uncommitted batch, the rerun finishes that
-batch only and entries appended after the original offset capture need one
-more run to land. For catch-up jobs that need TRUE drain-to-end semantics
-across restarts, use :func:`drain_available_now`, which re-runs the query
-to a zero-new-rows fixed point (restart semantics pinned in
-tests/test_redis_source.py). Production continuous triggers are unaffected
-(offsets advance every micro-batch).
+batch covering (checkpointed offset, latestOffset-at-start]. Entries
+appended after that offset capture (by a live producer, or after the
+uncommitted batch of a restarted checkpoint) need another run to land.
+Two drains reach the true end of stream instead:
+
+- Live (q115/q115b, ``operators/streaming_queries.py:_run_to_table``):
+  start the query on the default trigger, publish, then
+  ``processAllAvailable()`` and ``stop()``. Every entry acknowledged
+  before that call is read: it returns only after a later trigger's
+  ``latestOffset`` found nothing new. Starting the query first also hides
+  the source runner's start (a fresh Python process per stream start,
+  1.4–1.8 s on 4 cores; SCALING.md) behind the producer.
+- Catch-up across restarts: :func:`drain_available_now` re-runs an
+  availableNow query to a zero-new-rows fixed point (restart semantics
+  pinned in tests/test_redis_source.py).
+
+Production continuous triggers are unaffected (offsets advance every
+micro-batch).
 """
 
 from __future__ import annotations

@@ -123,11 +123,17 @@ class FakeRedisServer:
     # -- lifecycle ----------------------------------------------------------
 
     def close(self) -> None:
+        """Stop listening: connects to the port are refused from here on.
+        ``shutdown`` wakes the ``accept()`` blocked in ``_serve``; a bare
+        ``close()`` leaves that call holding the listener open, still
+        accepting. Connections already open keep their handler threads."""
         self._stop.set()
         try:
-            self._sock.close()
+            self._sock.shutdown(socket.SHUT_RDWR)
         except OSError:
             pass
+        self._sock.close()
+        self._thread.join(10)
 
     def __enter__(self) -> "FakeRedisServer":
         return self

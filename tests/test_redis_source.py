@@ -498,3 +498,117 @@ def test_server_closing_mid_reply_raises_connection_error(partial):
     finally:
         t.join(10)
         listener.close()
+
+
+# --- q115's wire drain: consumer started before its producer -------------
+
+
+@pytest.fixture
+def drain_calls(monkeypatch):
+    """Ids of the queries ``processAllAvailable`` was called on, in order."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    calls = []
+    original = StreamingQuery.processAllAvailable
+
+    def spy(q):
+        calls.append(q.id)
+        return original(q)
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", spy)
+    return calls
+
+
+def _await_first_batch(spark, timeout=120.0):
+    """Block until a running query has reported a micro-batch with rows."""
+    import time
+
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        for q in spark.streams.active:
+            if any(p.numInputRows for p in q.recentProgress):
+                return
+        time.sleep(0.05)
+    raise AssertionError(f"no micro-batch with rows within {timeout}s")
+
+
+def test_wire_drain_spans_batches_and_matches_oracle(spark, sf_dir, drain_calls):
+    """q115 with the feed split around the first micro-batch: half is
+    published, the live query drains it, the rest is published, and the
+    drain still ends with every entry read and q90's answer. The feed runs
+    before the drain waits (the wait would otherwise return on an empty
+    stream)."""
+    from eventstream_spark.cache import release_cached
+    from eventstream_spark.operators import all_oracles, streaming_queries as sq
+    from eventstream_spark.testing import compare, run_oracle
+
+    published = []
+
+    def publish(client, shards):
+        assert not drain_calls, "the drain waited before the feed ran"
+        ((stream, entries),) = shards.items()
+        half = len(entries) // 2
+        client.xadd_many(stream, entries[:half])
+        _await_first_batch(spark)
+        client.xadd_many(stream, entries[half:])
+        published.append(len(entries))
+
+    try:
+        got = sq._redis_hourly(spark, sf_dir, 1, publish=publish).toPandas()
+        info = dict(sq.LAST_RUN_INFO)
+    finally:
+        release_cached()
+    want = run_oracle(all_oracles()["q115_stream_redis"], sf_dir)
+    assert compare(got, want) == []
+    assert len(drain_calls) == 1
+    assert info["n_batches"] >= 2
+    assert info["input_rows"] == published[0] > 0
+
+
+def test_wire_drain_feed_error_stops_query_and_broker(spark, sf_dir, drain_calls):
+    """A producer that fails part-way: the error reaches the caller, no
+    query is left running, the broker's port is closed, and the drain
+    never waited on the stream."""
+    import socket
+
+    from eventstream_spark.cache import release_cached
+    from eventstream_spark.operators import streaming_queries as sq
+
+    ports = []
+
+    def publish(client, shards):
+        ports.append(client._sock.getpeername()[1])
+        stream, entries = next(iter(shards.items()))
+        client.xadd_many(stream, entries)
+        raise RuntimeError("producer failed")
+
+    try:
+        with pytest.raises(RuntimeError, match="producer failed"):
+            sq._redis_hourly(spark, sf_dir, 2, publish=publish)
+    finally:
+        release_cached()
+    assert spark.streams.active == []
+    assert drain_calls == []
+    with pytest.raises(ConnectionRefusedError):
+        socket.create_connection(("127.0.0.1", ports[0]), timeout=5).close()
+
+
+def test_source_runner_import_skips_other_connectors():
+    """Spark's source runner unpickles RedisWireDataSource in a fresh
+    interpreter per stream start; that import must not load the batch,
+    bucketed or file-stream connectors."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys, eventstream_spark.sources.redis_stream\n"
+        "print(sorted(m for m in ('batch', 'bucketed', 'stream')"
+        " if 'eventstream_spark.sources.' + m in sys.modules))"
+    )
+    env = {**os.environ, "PYTHONPATH": root}
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]"

@@ -358,3 +358,66 @@ def test_config_json_schema_matches_validator():
     from eventstream_spark.plans.config import _PLAIN_CONN_FIELDS
 
     assert set(conn) == set(_PLAIN_CONN_FIELDS) | set(_SECRET_CONN_FIELDS) | {"port"}
+
+
+def _fanout_bus(tmp_path, sinks: dict[str, str]):
+    """A three-route bus over a one-file landing dir, one parquet sink per
+    route (route name -> sink target)."""
+    from eventstream_spark.plans.config import BusConfig, RouteConfig, SinkConfig
+
+    events = {"clicks": ("click",), "purchases": ("purchase",), "problems": ("error", "signup")}
+    routes = tuple(
+        RouteConfig(name=name, event=events[name][0], aliases=events[name][1:],
+                    sink=SinkConfig("parquet", target))
+        for name, target in sinks.items()
+    )
+    landing = tmp_path / "landing"
+    cfg = EngineConfig("fanout-app", "i-1", (BusConfig("ev", source_path=str(landing), routes=routes),))
+    return cfg, str(landing)
+
+
+def _land_events(spark, sf_dir, landing: str):
+    os.makedirs(landing)
+    shutil.copy(table_path(sf_dir, "events"), os.path.join(landing, "part-0.parquet"))
+    return spark.read.parquet(landing).schema
+
+
+def test_fanout_route_error_fails_drain_and_releases_batch(spark, sf_dir, tmp_path):
+    """One route's sink cannot be written (its target is a regular file):
+    the drain fails with that route's error once the other writes are
+    done, and the persisted micro-batch is released."""
+    from pyspark.errors import StreamingQueryException
+
+    bad = tmp_path / "not_a_dir"
+    bad.write_text("x")
+    cfg, landing = _fanout_bus(tmp_path, {
+        "clicks": str(tmp_path / "clicks"),
+        "purchases": str(bad),
+        "problems": str(tmp_path / "problems"),
+    })
+    schema = _land_events(spark, sf_dir, landing)
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    q = start_streaming(spark, cfg, cfg.busses[0], landing, schema, str(tmp_path / "ckpt"))
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert q.exception() is not None and str(bad) in str(q.exception())
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
+    for ok in ("clicks", "problems"):
+        assert spark.read.parquet(str(tmp_path / ok)).count() > 0
+
+
+def test_fanout_route_writes_run_in_the_stream_job_group(spark, sf_dir, tmp_path):
+    """Route writes run on pool threads, yet their jobs carry the stream's
+    job group (``stop()`` cancels by that group)."""
+    names = ("clicks", "purchases", "problems")
+    cfg, landing = _fanout_bus(tmp_path, {n: str(tmp_path / n) for n in names})
+    schema = _land_events(spark, sf_dir, landing)
+    q = start_streaming(spark, cfg, cfg.busses[0], landing, schema, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) >= len(names)
+    ev = load(spark, sf_dir, "events")
+    assert spark.read.parquet(str(tmp_path / "problems")).count() == ev.where(
+        col("event_type").isin("error", "signup")
+    ).count()
